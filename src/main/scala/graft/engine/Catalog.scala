@@ -141,7 +141,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     writePhysNames(dir, td.cols.map(_.name))
   }
 
-  def dropTable(db: String, tbl: String): Unit = {
+  def dropTable(db: String, tbl: String): Unit = withCommitLock(db, tbl) {
     // error string parity: "does not exists" [sic] (reference schema.go:356)
     if (!hasTable(db, tbl)) throw OtError(s"Table $db.$tbl does not exists")
     schemaCache.remove(s"$db.$tbl")
@@ -154,7 +154,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       readSchema(tblPath(db, tbl), db, tbl)
     })
 
-  def renameTable(db: String, tbl: String, to: String): Unit = {
+  def renameTable(db: String, tbl: String,
+      to: String): Unit = withCommitLock(db, tbl) {
     val td = getSchema(db, tbl)
     schemaCache.remove(s"$db.$tbl")
     Files.move(tblPath(db, tbl), tblPath(db, to),
@@ -162,7 +163,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     writeSchema(tblPath(db, to), td.copy(tblName = to))
   }
 
-  def renameColumn(db: String, tbl: String, from: String, to: String): Unit = {
+  def renameColumn(db: String, tbl: String, from: String,
+      to: String): Unit = withCommitLock(db, tbl) {
     val td = getSchema(db, tbl)
     if (!td.nameMap.contains(from)) throw OtError(s"Column $from does not exist")
     if (td.nameMap.contains(to)) throw OtError(s"Column $to already exists")
@@ -274,15 +276,18 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
   /** [[readTable]] keeping the ns remainder columns — the engine's
     * SELECT path needs them for ns-exact predicates and sort.
     */
-  def readTableKeepNs(td: TableDef): DataFrame = {
-    if (isClean(td)) return rawData(td).drop(SeqCol)
-    val w = Window.partitionBy(keyColsWithNs(td).map(col): _*)
-      .orderBy(col(SeqCol).desc)
-    maskedData(td)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", SeqCol)
-  }
+  def readTableKeepNs(td: TableDef): DataFrame =
+    // rawData's parquet source lists data/ as it is built
+    whileClean(td)(rawData(td)) match {
+      case Some(df) => df.drop(SeqCol)
+      case None =>
+        val w = Window.partitionBy(keyColsWithNs(td).map(col): _*)
+          .orderBy(col(SeqCol).desc)
+        maskedData(td)
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1)
+          .drop("__rn", SeqCol)
+    }
 
   /** Range-ordered read of a CLEAN table with no sort in the plan: the
     * compacted/imported layout is `repartitionByRange` on the leading key
@@ -301,15 +306,16 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * predicate on top (pruning is a superset gate).
     *
     * Returns None (caller falls back to an explicit sort) when the table
-    * is dirty or empty.
+    * is dirty or empty, or a commit lands while its files are listed.
     */
   def readTableOrdered(td: TableDef, reverse: Boolean,
       pushed: Seq[org.apache.spark.sql.sources.Filter] = Nil)
       : Option[DataFrame] = {
-    if (!isClean(td) || !hasData(td)) return None
-    val files = withStream(Files.list(dataDir(td)))(
-      _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
-      .sortBy(_.getFileName.toString)
+    val files = whileClean(td) {
+      if (!hasData(td)) Nil
+      else withStream(Files.list(dataDir(td)))(
+        _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
+    }.getOrElse(Nil).sortBy(_.getFileName.toString)
     if (files.isEmpty) return None
     val maxSplit = spark.conf.get("spark.sql.files.maxPartitionBytes",
       (128L * 1024 * 1024).toString).takeWhile(_.isDigit).toLong
@@ -424,11 +430,13 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Time-travel: the LWW view as of write batch `seq` (inclusive) — a
-    * free capability of the append-log layout. `writeVersion` returns
-    * the current batch counter to capture before mutating. Deletion
-    * vectors newer than `seq` are ignored, so travel before a DELETE
-    * resurrects the rows.
+  /** Time-travel: the LWW view as of commit `seq` (inclusive) — a free
+    * capability of the append-log layout. `writeVersion` returns the
+    * current commit counter to capture before mutating. Versions count
+    * commits, not calls: concurrent appends drained into one group
+    * commit share one version, so travel cannot stop between them.
+    * Deletion vectors newer than `seq` are ignored, so travel before a
+    * DELETE resurrects the rows.
     */
   def readTableAsOf(td: TableDef, seq: Long): DataFrame = {
     val w = Window.partitionBy(keyColsWithNs(td).map(col): _*)
@@ -439,6 +447,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       .drop(("__rn" +: SeqCol +: nsColNames(td)): _*)
   }
 
+  /** The table's current commit counter (see [[readTableAsOf]]). */
   def writeVersion(td: TableDef): Long = currentSeq(td)
 
   private def cleanMarker(td: TableDef): Path =
@@ -451,32 +460,48 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     else 0L
   }
 
-  /** True when no write has landed since the last compact/import. */
-  private def isClean(td: TableDef): Boolean = {
+  /** `list` (a listing of `data/`) when the table is clean — no write
+    * since the last compact/import — from before the listing to after
+    * it; None when dirty. Commits run outside the engine monitor and a
+    * commit claims its seq before it publishes its file, so an unchanged
+    * seq around the listing means the listing holds no newer file (and
+    * needs no LWW dedupe).
+    */
+  private[engine] def whileClean[A](td: TableDef)(list: => A): Option[A] = {
     val m = cleanMarker(td)
-    Files.exists(m) &&
-      new String(Files.readAllBytes(m), StandardCharsets.UTF_8).trim.toLong ==
-        currentSeq(td)
+    if (!Files.exists(m)) return None
+    val seq = currentSeq(td)
+    if (new String(Files.readAllBytes(m), StandardCharsets.UTF_8).trim.toLong
+        != seq) return None
+    val listed = list
+    if (currentSeq(td) == seq) Some(listed) else None
   }
 
   private def markClean(td: TableDef): Unit =
-    Files.write(cleanMarker(td),
-      currentSeq(td).toString.getBytes(StandardCharsets.UTF_8))
+    replaceFile(cleanMarker(td), currentSeq(td).toString)
 
+  /** Replace a small metadata file by an atomic rename, so readers that
+    * hold no commit lock never see it truncated. Writers hold the
+    * table's commit lock, so the staging name is theirs alone.
+    */
+  private def replaceFile(p: Path, content: String): Unit = {
+    val tmp = p.resolveSibling("." + p.getFileName + ".tmp")
+    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Claim the table's next seq. Every caller (a commit, an import, a
+    * DELETE) holds the table's commit lock, which serializes the
+    * read-modify-write. Cross-process claims are out of scope (the
+    * reference is a single server process too).
+    */
   private def nextSeq(td: TableDef): Long = {
-    // the read-modify-write is serialized on the catalog monitor: engine
-    // mutations hold the engine lock, but direct catalog calls (compact,
-    // appendRows from library code) must not race a concurrent wire
-    // batch to the same seq. Cross-process claims are out of scope (the
-    // reference is a single server process too).
-    this.synchronized {
-      val p = tblPath(td.dbName, td.tblName).resolve("seq")
-      val cur = if (Files.exists(p))
-        new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong
-      else 0L
-      Files.write(p, (cur + 1).toString.getBytes(StandardCharsets.UTF_8))
-      cur + 1
-    }
+    val p = tblPath(td.dbName, td.tblName).resolve("seq")
+    val cur = if (Files.exists(p))
+      new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong
+    else 0L
+    replaceFile(p, (cur + 1).toString)
+    cur + 1
   }
 
   /** Rename a logical-name DataFrame to physical names for writing. */
@@ -505,17 +530,25 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       else Seq(main)
     })
 
-  /** Append whole rows (order matches td.cols). One call = one batch =
-    * one `__seq` stamp (rows within a batch share it; later batch wins,
-    * within a batch the last row wins via row index tiebreak packed into
-    * the low 6 decimal digits — hence the 1M-row batch cap, which keeps
-    * a batch from overflowing into the next batch's seq space and
-    * corrupting LWW/time-travel ordering).
+  /** Append whole rows (order matches td.cols); returns once they are
+    * committed. One COMMIT — not one call — is one batch, one `__seq`
+    * stamp and one parquet file: appends to the same table that queue
+    * while another commit is writing are drained together, in arrival
+    * order, by whichever caller next holds the table's commit lock
+    * (group commit; a lone caller commits a group of one, and nothing
+    * waits on a timer). Rows within a commit share its seq, and a later
+    * row wins via the row index tiebreak packed into the low 6 decimal
+    * digits — so a later arrival in the same group wins just as a later
+    * commit does. Hence the 1M-row cap, per call and per group, which
+    * keeps a batch from overflowing into the next batch's seq space and
+    * corrupting LWW/time-travel ordering; a group also stays within
+    * [[Catalog.MaxBatchBytes]]. A failed write fails every call of its
+    * group and publishes no file.
     */
   def appendRows(td: TableDef, rows: Seq[Seq[Any]]): Unit = {
-    if (rows.length >= 1000000)
-      throw OtError("Batch insert of 1000000 rows or more is not " +
-        "supported; split into smaller batches")
+    if (rows.length >= Catalog.MaxBatchRows)
+      throw OtError(s"Batch insert of ${Catalog.MaxBatchRows} rows or more " +
+        "is not supported; split into smaller batches")
     // FDB-analog BYTE bound (reference bindings/go/test.go:58-59 sizes
     // its batches "limited by foundationdb transaction size" — FDB
     // caps a transaction at 10 MB): the row-count guard alone misses
@@ -540,6 +573,78 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       throw OtError(s"Batch insert of ~$estBytes bytes exceeds the " +
         s"${Catalog.MaxBatchBytes}-byte batch bound (the reference's " +
         "FoundationDB transaction-size limit); split into smaller batches")
+    val log = commitLog(td.dbName, td.tblName)
+    val me = new Catalog.Append(td, rows, estBytes)
+    log.queue.add(me)
+    log.lock.lock()
+    try while (!me.done) commitGroup(log)
+    finally log.lock.unlock()
+    if (me.error != null) throw me.error
+  }
+
+  // per-table commit lock + queue of appends waiting on it; kept for the
+  // catalog's life (one small entry per table name ever written)
+  private val commitLogs = TrieMap.empty[String, Catalog.CommitLog]
+
+  private def commitLog(db: String, tbl: String): Catalog.CommitLog =
+    commitLogs.getOrElseUpdate(s"$db.$tbl", new Catalog.CommitLog)
+
+  /** Run `body` holding the table's commit lock: no append commits, and
+    * no other holder drops, renames, deletes from or rewrites the table
+    * meanwhile. Lock order: the engine monitor (when held) before a
+    * commit lock, and one table's commit lock at a time.
+    */
+  private[engine] def withCommitLock[A](db: String, tbl: String)(body: => A): A = {
+    val lock = commitLog(db, tbl).lock
+    lock.lock()
+    try body finally lock.unlock()
+  }
+
+  /** Appends queued on the table's commit lock (for specs that park it). */
+  private[engine] def queuedAppends(td: TableDef): Int =
+    commitLog(td.dbName, td.tblName).queue.size
+
+  /** Under the table's commit lock: take the queued appends from the head
+    * in arrival order while they were bound to the head's table shape and
+    * the group stays under both batch bounds, and write them as one file
+    * under one seq with the head's TableDef. Every member learns the
+    * outcome. An append bound to another shape (its table was dropped
+    * and re-created meanwhile) heads a later group of its own.
+    */
+  private def commitGroup(log: Catalog.CommitLog): Unit = {
+    // non-empty: the caller's own append stays queued until a commit
+    // under this lock takes it, and each call passed both bounds alone
+    val head = log.queue.poll()
+    val members = scala.collection.mutable.ArrayBuffer(head)
+    var nRows = head.rows.length.toLong
+    var nBytes = head.estBytes
+    var next = log.queue.peek()
+    while (next != null && shape(next.td) == shape(head.td) &&
+        nRows + next.rows.length < Catalog.MaxBatchRows &&
+        nBytes + next.estBytes <= Catalog.MaxBatchBytes) {
+      members += log.queue.poll()
+      nRows += next.rows.length
+      nBytes += next.estBytes
+      next = log.queue.peek()
+    }
+    val error =
+      try { writeBatch(head.td, members.iterator.flatMap(_.rows)); null }
+      catch { case e: Throwable => e }
+    members.foreach { m => m.error = error; m.done = true }
+  }
+
+  /** What a bound row's cells must match: column types and key flags. */
+  private def shape(td: TableDef): Seq[(OtType, Boolean)] =
+    td.cols.map(c => (c.tpe, c.isKey))
+
+  /** One commit: a new seq and one part file holding `rows`. */
+  private def writeBatch(td: TableDef, rows: Iterator[Seq[Any]]): Unit = {
+    // the table may have been dropped or renamed (and its name reused)
+    // since the caller resolved it: fail rather than re-create a stray
+    // directory or write rows of another shape (getSchema throws for a
+    // missing table). A re-created table of the same shape takes the rows.
+    if (shape(getSchema(td.dbName, td.tblName)) != shape(td))
+      throw OtError(s"Table ${td.dbName}.${td.tblName} does not exists")
     val seq = nextSeq(td)
     val schema = physSchema(td).add(SeqCol, LongType, nullable = false)
     // tight loop: this is the 100k-rows/batch ingest hot path
@@ -547,7 +652,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     val width = schema.length
     val nCols = isTs.length
     var i = 0
-    val cellRows = rows.iterator.map { r =>
+    val cellRows = rows.map { r =>
       val cells = new Array[Any](width)
       var c = 0
       var o = 0
@@ -589,7 +694,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * min/max stats give range pruning on PK scans. Column order/types
     * must already match the TableDef.
     */
-  def importData(td: TableDef, df: DataFrame): Unit = {
+  def importData(td: TableDef, df: DataFrame): Unit =
+      withCommitLock(td.dbName, td.tblName) {
     val wasEmpty = !hasData(td)
     val seq = nextSeq(td)
     // bulk imports arrive through Spark TimestampType (µs): remainders 0
@@ -624,10 +730,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * file rewritten — the shape that survives a 100 TB table. A full
     * DELETE (no predicate) is a metadata drop of the data dir.
     */
-  def deleteWhere(td: TableDef, pred: Option[org.apache.spark.sql.Column]): Unit = {
-    if (!hasData(td)) return
+  def deleteWhere(td: TableDef, pred: Option[org.apache.spark.sql.Column]): Unit =
+      withCommitLock(td.dbName, td.tblName) {
     val dir = tblPath(td.dbName, td.tblName)
-    pred match {
+    if (hasData(td)) pred match {
       case None =>
         deleteRecursively(dir.resolve("data"))
         deleteRecursively(dir.resolve("deletes"))
@@ -643,10 +749,11 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Tail the table's append log as a stream: every appendRows batch is
+  /** Tail the table's append log as a stream: every append commit is
     * one parquet file, so Spark's file-stream source surfaces each
-    * insert batch as a micro-batch — a live subscription to table
-    * changes (the push counterpart of the reference clients' polling).
+    * commit — one caller's batch, or a group of concurrent appends — as
+    * its unit of change: a live subscription to table changes (the push
+    * counterpart of the reference clients' polling).
     * Rows keep `__seq` for downstream LWW/ordering; physical→logical
     * renames are applied like any read.
     */
@@ -659,10 +766,14 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
 
   /** Fold the append log to one version per PK and fold deletion
     * vectors away (the scale-path maintenance op; optional for
-    * correctness).
+    * correctness). Holds the table's commit lock throughout, so no
+    * commit lands between the read of `data/` and its replacement.
     */
-  def compact(td: TableDef): Unit = {
-    if (!hasData(td)) return
+  def compact(td: TableDef): Unit = withCommitLock(td.dbName, td.tblName) {
+    if (hasData(td)) compactData(td)
+  }
+
+  private def compactData(td: TableDef): Unit = {
     val dir = tblPath(td.dbName, td.tblName)
     val w = Window.partitionBy(keyColsWithNs(td).map(col): _*)
       .orderBy(col(SeqCol).desc)
@@ -735,4 +846,24 @@ object Catalog {
     * packing, this bounds driver-held payload for wide text rows.
     */
   val MaxBatchBytes: Long = 10000000L
+
+  /** Row bound of one batch: the row index packs into the low 6 decimal
+    * digits of `__seq`.
+    */
+  val MaxBatchRows: Int = 1000000
+
+  /** One [[Catalog.appendRows]] call waiting for its commit. `done` and
+    * `error` are written and read under the table's commit lock.
+    */
+  private final class Append(val td: TableDef, val rows: Seq[Seq[Any]],
+      val estBytes: Long) {
+    var done = false
+    var error: Throwable = null
+  }
+
+  /** A table's commit lock and the appends queued on it. */
+  private final class CommitLog {
+    val lock = new java.util.concurrent.locks.ReentrantLock()
+    val queue = new java.util.concurrent.ConcurrentLinkedQueue[Append]()
+  }
 }

@@ -38,6 +38,8 @@ private object Resolved {
   final case class InsertS(td: TableDef, values: Array[Any],
       nPlaceholders: Int)
   final case class DeleteS(td: TableDef, conds: Seq[Cond], nPlaceholders: Int)
+  /** An INSERT's bound rows, committed outside the engine monitor. */
+  final case class Commit(td: TableDef, rows: Seq[Seq[Any]])
 }
 
 /** The Spark-hosted engine exposing the reference's statement surface
@@ -55,25 +57,19 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
 
   /** Execute with a per-call current-db override (the wire server keeps
     * one db per CONNECTION, reference server.go:232 `usedDbName`, while
-    * the engine's `use` state is global). Resolution runs under the
-    * lock; the returned DataFrame's execution does not.
+    * the engine's `use` state is global). See [[execute]] for what runs
+    * under the engine monitor.
     */
   def executeWithDb(sql: String, args: Seq[Any], user: Option[User],
-      db: String): DataFrame = this.synchronized {
-    val prev = currentDb
-    if (db != null && db.nonEmpty) currentDb = db
-    try executeImpl(sql, args, user) finally currentDb = prev
-  }
+      db: String): DataFrame =
+    bindThenCommit(db)(bindStatement(sql, args, user, keepNs = false))
 
   /** [[batchInsert]] under a per-call current-db override (wire server
     * connections carry their own used db).
     */
   def batchInsertWithDb(sql: String, argsArray: Seq[Seq[Any]],
-      user: Option[User], db: String): Unit = this.synchronized {
-    val prev = currentDb
-    if (db != null && db.nonEmpty) currentDb = db
-    try batchInsert(sql, argsArray, user) finally currentDb = prev
-  }
+      user: Option[User], db: String): Unit =
+    bindThenCommit(db)(bindBatch(sql, argsArray, user))
 
   /** Wire-facing variant: SELECT results additionally carry the `__ns`
     * companion of every selected timestamp column, so the server can
@@ -81,17 +77,8 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     * Non-SELECT statements behave exactly like [[executeWithDb]].
     */
   def executeWireNs(sql: String, args: Seq[Any], user: Option[User],
-      db: String): DataFrame = this.synchronized {
-    val prev = currentDb
-    if (db != null && db.nonEmpty) currentDb = db
-    try {
-      Parser.parse(sql) match {
-        case s: Select =>
-          executeSelect(resolveSelect(s, user), args, keepNs = true)
-        case _ => executeImpl(sql, args, user)
-      }
-    } finally currentDb = prev
-  }
+      db: String): DataFrame =
+    bindThenCommit(db)(bindStatement(sql, args, user, keepNs = true))
 
   def use(db: String, user: Option[User] = None): Unit = this.synchronized {
     if (!catalog.hasDatabase(db)) throw OtError(s"Database $db does not exist")
@@ -103,68 +90,100 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
 
   // ── entry point ──
 
-  /** Resolution runs under the engine monitor so the per-call db
-    * overrides ([[executeWithDb]]/[[executeWireNs]]) can never bleed
-    * into a concurrent caller's name resolution; the returned
-    * DataFrame's execution takes no lock.
+  /** Parse, resolve and bind run under the engine monitor, so the
+    * per-call db overrides ([[executeWithDb]]/[[executeWireNs]]) can
+    * never bleed into a concurrent caller's name resolution; so do
+    * DELETE and DDL. An INSERT's rows commit after the monitor is
+    * released, through [[Catalog.appendRows]], where concurrent inserts
+    * into one table share a group commit. The returned DataFrame's
+    * execution takes no lock.
     */
   def execute(sql: String, args: Seq[Any] = Nil,
-      user: Option[User] = None): DataFrame = this.synchronized {
-    executeImpl(sql, args, user)
+      user: Option[User] = None): DataFrame =
+    bindThenCommit("")(bindStatement(sql, args, user, keepNs = false))
+
+  /** The one statement path of every entry point: `bind` runs under the
+    * engine monitor with the current db overridden by `db` (when
+    * non-empty); a bound INSERT then commits without the monitor.
+    */
+  private def bindThenCommit(db: String)(
+      bind: => Either[DataFrame, Commit]): DataFrame = {
+    val bound = this.synchronized {
+      val prev = currentDb
+      if (db != null && db.nonEmpty) currentDb = db
+      try bind finally currentDb = prev
+    }
+    bound match {
+      case Left(df) => df
+      case Right(Commit(td, rows)) =>
+        catalog.appendRows(td, rows)
+        // once the rows are visible (until then the cached factors are
+        // current, even those an adjusted SELECT cached between the bind
+        // and the commit; factors are computed and cached under the monitor)
+        if (td.tblName == "_adj_")
+          this.synchronized { adjCache.remove(td.dbName) }
+        emptyDf
+    }
   }
 
-  private def executeImpl(sql: String, args: Seq[Any],
-      user: Option[User]): DataFrame = {
+  /** Parse, resolve and bind one statement (under the engine monitor):
+    * an INSERT yields its bound rows; every other statement runs here
+    * and yields its DataFrame (empty for DELETE and DDL).
+    */
+  private def bindStatement(sql: String, args: Seq[Any], user: Option[User],
+      keepNs: Boolean): Either[DataFrame, Commit] =
     Parser.parse(sql) match {
-      case s: Select => executeSelect(resolveSelect(s, user), args)
-      case s: SelectFn => executeTableFn(s, args, user)
-      case s: Insert =>
-        val r = resolveInsert(s, user)
-        if (r.td.tblName == "_adj_") adjCache.remove(r.td.dbName)
-        executeInsert(r, Seq(args))
-        emptyDf
+      case s: Insert => Right(bindInsert(resolveInsert(s, user), Seq(args)))
+      case s: Select => Left(executeSelect(resolveSelect(s, user), args, keepNs))
+      case s: SelectFn => Left(executeTableFn(s, args, user))
       case s: Delete =>
         val r = resolveDelete(s, user)
         if (r.td.tblName == "_adj_") adjCache.remove(r.td.dbName)
         executeDelete(r, args)
-        emptyDf
+        Left(emptyDf)
       case CreateDatabase(ine, name) =>
         if (user.exists(!_.isAdmin)) throw OtError("No permisssion")
         if (!(ine && catalog.hasDatabase(name))) catalog.createDatabase(name)
-        emptyDf
+        Left(emptyDf)
       case CreateTable(ine, tblName, cols, keys) =>
         val db = resolveDbName(tblName)
         if (getPerm(dbOrCurrent(tblName), "", user) != Perm.Writable)
           throw OtError("No permisssion")
         if (!(ine && catalog.hasTable(db, tblName.table)))
           createTableChecked(db, tblName.table, cols, keys)
-        emptyDf
+        Left(emptyDf)
       case DropDatabase(name) =>
         if (user.exists(!_.isAdmin)) throw OtError("No permisssion")
         catalog.dropDatabase(name)
         adjCache.remove(name)
-        emptyDf
+        Left(emptyDf)
       case DropTable(tbl) =>
         val db = resolveDbName(tbl)
         if (getPerm(db, tbl.table, user) != Perm.Writable)
           throw OtError("No permisssion")
         if (tbl.table == "_adj_") adjCache.remove(db)
         catalog.dropTable(db, tbl.table)
-        emptyDf
+        Left(emptyDf)
       case RenameTable(tbl, to) =>
         val td = tableSchema(tbl)
         if (getPerm(td.dbName, td.tblName, user) != Perm.Writable)
           throw OtError("No permisssion")
         catalog.renameTable(td.dbName, td.tblName, to)
-        emptyDf
+        Left(emptyDf)
       case RenameColumn(tbl, from, to) =>
         val td = tableSchema(tbl)
         if (getPerm(td.dbName, td.tblName, user) != Perm.Writable)
           throw OtError("No permisssion")
         catalog.renameColumn(td.dbName, td.tblName, from, to)
-        emptyDf
+        Left(emptyDf)
     }
-  }
+
+  private def bindBatch(sql: String, argsArray: Seq[Seq[Any]],
+      user: Option[User]): Either[DataFrame, Commit] =
+    Parser.parse(sql) match {
+      case s: Insert => Right(bindInsert(resolveInsert(s, user), argsArray))
+      case _ => throw OtError("Only insert can be batched")
+    }
 
   /** Register every table of `db` as a temp view named `<db>_<table>`
     * and return the view names — full Spark SQL (joins, aggregations,
@@ -271,15 +290,8 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
 
   /** Bulk ingest: many rows, one append batch (reference query.go:294-307). */
   def batchInsert(sql: String, argsArray: Seq[Seq[Any]],
-      user: Option[User] = None): Unit = this.synchronized {
-    Parser.parse(sql) match {
-      case s: Insert =>
-        val r = resolveInsert(s, user)
-        if (r.td.tblName == "_adj_") adjCache.remove(r.td.dbName)
-        executeInsert(r, argsArray)
-      case _ => throw OtError("Only insert can be batched")
-    }
-  }
+      user: Option[User] = None): Unit =
+    bindThenCommit("")(bindBatch(sql, argsArray, user))
 
   private def emptyDf: DataFrame = spark.emptyDataFrame
 
@@ -801,7 +813,10 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
       } else Map.empty
     })
 
-  private def executeInsert(s: InsertS, argsArray: Seq[Seq[Any]]): Unit = {
+  /** Bind an INSERT's placeholders for every argument row (under the
+    * engine monitor); the rows commit later, outside it.
+    */
+  private def bindInsert(s: InsertS, argsArray: Seq[Seq[Any]]): Commit = {
     val rows = argsArray.map { args =>
       checkArity(s.nPlaceholders, args)
       s.td.cols.indices.map { i =>
@@ -812,7 +827,7 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
         }
       }
     }
-    catalog.appendRows(s.td, rows)
+    Commit(s.td, rows)
   }
 
   private def executeDelete(s: DeleteS, args: Seq[Any]): Unit = {

@@ -52,7 +52,9 @@ object LocalParquet {
   }
 
   /** Write `rows` (cell arrays positional against `schema`; timestamp
-    * cells are µs-truncated Instants) as one snappy parquet file.
+    * cells are µs-truncated Instants) as one snappy parquet file. The
+    * catalog calls this once per commit, so one file holds one commit's
+    * rows — a group of concurrent appends, or a lone caller's batch.
     *
     * Commit protocol: the bytes stream into a dot-prefixed sibling
     * (hidden from Spark's file listing, like the committer's
@@ -64,7 +66,11 @@ object LocalParquet {
   def write(file: Path, schema: StructType,
       rows: Iterator[Array[Any]]): Unit = {
     val mt = messageType(schema)
-    val conf = new Configuration()
+    // no default resources: parsing core-default.xml on every call was
+    // most of a one-row write, and the writer reads no Hadoop setting
+    // (LocalOutputFile bypasses FileSystem; the codec is set below and
+    // page sizes keep parquet's defaults)
+    val conf = new Configuration(false)
     GroupWriteSupport.setSchema(mt, conf)
     val staging = file.resolveSibling("." + file.getFileName + ".inprogress")
     // LocalOutputFile writes through java.nio directly — no Hadoop

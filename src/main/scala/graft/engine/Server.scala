@@ -418,10 +418,13 @@ final class GraftServer(engine: Engine, port: Int = 0,
     * result is Left(error), never an unbounded driver collect — and fold
     * every trailing `__ns` remainder column into its timestamp, yielding
     * full-nanosecond Instants (which [[Wire]] serializes as (sec, nsec)
-    * pairs — the reference's wire precision, query.go:754-779).
+    * pairs — the reference's wire precision, query.go:754-779). A
+    * statement with no columns (INSERT, DELETE, DDL) has no rows to
+    * collect and runs no Spark plan.
     */
   private def mergeNs(
       df: org.apache.spark.sql.DataFrame): Either[String, Seq[Seq[Any]]] = {
+    if (df.schema.isEmpty) return Right(Nil)
     val collected = df.limit(maxWireRows + 1).collect()
     if (collected.length > maxWireRows)
       return Left(s"Result exceeds $maxWireRows rows over the wire; " +

@@ -337,6 +337,71 @@ class ServerSpec extends AnyFunSuite {
     } finally { c.close(); srv.stop() }
   }
 
+  test("concurrent single-row inserts: acked keys read back, rewrites after ack win") {
+    client.execute("create database if not exists net")
+    client.execute("create table net.gc(k int, v double, primary key(k))")
+    val insert = "insert into net.gc values(?, ?)"
+    val conns = (0 until 4).map(c => new NetClient("127.0.0.1",
+      server.boundPort, protocol = if (c % 2 == 0) "json" else "bson"))
+    val models = Array.fill(4)(Map.empty[Int, Double])
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    try {
+      // per connection, 6 rounds of 4 outstanding inserts: first writes
+      // of two new keys, and rewrites of the two keys whose first writes
+      // the previous round saw acked
+      val senders = conns.zipWithIndex.map { case (c, ci) =>
+        val t = new Thread(() => try {
+          var acked = Seq.empty[Int]
+          for (r <- 0 until 6) {
+            val fresh = Seq(ci * 1000 + 2 * r, ci * 1000 + 2 * r + 1)
+            val sends = fresh.map(_ -> (r + 1.0)) ++ acked.map(_ -> -(r + 1.0))
+            val futs = sends.map { case (k, v) => c.executeAsync(insert, Seq[Any](k, v)) }
+            futs.foreach(f => scala.concurrent.Await.result(f,
+              scala.concurrent.duration.Duration("60s")))
+            models(ci) ++= sends
+            acked = fresh
+          }
+        } catch { case e: Throwable => failures.add(e) })
+        t.start()
+        t
+      }
+      senders.foreach(_.join())
+      assert(failures.isEmpty, failures)
+      val want = models.reduce(_ ++ _)
+      assert(want.size == 4 * 12)
+      val got = client.execute("select * from net.gc").map(r =>
+        r(0).asInstanceOf[Number].intValue -> r(1).asInstanceOf[Number].doubleValue)
+      assert(got.toMap == want)
+      assert(got.length == want.size)
+    } finally conns.foreach(_.close())
+  }
+
+  test("a run INSERT, DELETE or DDL replies null on JSON and BSON") {
+    client.execute("create database if not exists net")
+    val srv = new GraftServer(engine, port = 0)
+    try for (json <- Seq(true, false)) {
+      val raw = new java.net.Socket("127.0.0.1", srv.boundPort)
+      try {
+        raw.setSoTimeout(30000)
+        val out = new java.io.DataOutputStream(raw.getOutputStream)
+        val in = new java.io.DataInputStream(raw.getInputStream)
+        if (json) Wire.writeFrame(out, "protocol=json".getBytes("UTF-8"))
+        val tbl = if (json) "nulls_json" else "nulls_bson"
+        Seq(s"create table net.$tbl(k int, v double, primary key(k))",
+          s"insert into net.$tbl values(1, 1.5)",
+          s"delete from net.$tbl where k=1",
+          s"drop table net.$tbl").zipWithIndex.foreach { case (sql, i) =>
+          val req = Map[String, Any]("0" -> i, "1" -> "run", "2" -> sql)
+          Wire.writeFrame(out, if (json) Wire.encode(req) else Bson.encode(req))
+          val body = Wire.readFrame(in)
+          val resp = if (json) Wire.decode(body) else Bson.decode(body)
+          assert(resp.get("0").map(_.toString).contains(i.toString), resp)
+          assert(resp.contains("1") && resp("1") == null, s"$sql: $resp")
+        }
+      } finally raw.close()
+    } finally srv.stop()
+  }
+
   test("table-valued functions over the wire: pipeline operators via SQL, JSON + BSON") {
     // the extension surface (SURVEY §2.9): library pipeline operators
     // addressable from the dialect — parse → catalog resolve under the

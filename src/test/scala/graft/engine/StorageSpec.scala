@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
 
 /** Round-2 storage-layer semantics: deletion vectors (no-rewrite
   * DELETE), metadata-only column renames that survive later inserts,
-  * the 1M-row batch guard, and the clean-table ordered read that keeps
-  * Exchange/Sort out of compat SELECT plans.
+  * the 1M-row batch guard, the clean-table ordered read that keeps
+  * Exchange/Sort out of compat SELECT plans, and group commit of
+  * concurrent appends.
   */
 class StorageSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -292,5 +293,210 @@ class StorageSpec extends AnyFunSuite {
     val got = df.collect().map(r =>
       (r.getTimestamp(0).toInstant.getEpochSecond, r.getDouble(1))).toSeq
     assert(got == Seq((0L, 0.5), (2L, 0.5), (4L, 1.0)))
+  }
+
+  /** Park the table's commit lock, queue one append per batch from its
+    * own thread (each thread starts once the previous append is queued,
+    * so arrival order is the batch order), release the lock, and return
+    * each call's failure, if any.
+    */
+  private def parkedAppends(td: TableDef,
+      batches: Seq[Seq[Seq[Any]]]): Seq[Option[Throwable]] = {
+    val failures = Array.fill[Option[Throwable]](batches.length)(None)
+    val threads = engine.catalog.withCommitLock(td.dbName, td.tblName) {
+      batches.zipWithIndex.map { case (rows, j) =>
+        val t = new Thread(() =>
+          try engine.catalog.appendRows(td, rows)
+          catch { case e: Throwable => failures(j) = Some(e) })
+        t.start()
+        while (engine.catalog.queuedAppends(td) < j + 1 && t.isAlive)
+          Thread.onSpinWait()
+        assert(engine.catalog.queuedAppends(td) == j + 1)
+        t
+      }
+    }
+    threads.foreach(_.join())
+    failures.toSeq
+  }
+
+  private def appendFiles(tbl: String): Seq[Path] = {
+    val d = java.nio.file.Paths.get(engine.warehouse, "s", tbl, "data")
+    if (!Files.isDirectory(d)) Nil
+    else Files.list(d).iterator.asScala
+      .filter(_.getFileName.toString.startsWith("part-append")).toSeq
+  }
+
+  test("group commit: appends queued on the commit lock land as one file and one seq") {
+    engine.execute("create table s.gc(k int, v double, primary key(k))")
+    val td = engine.catalog.getSchema("s", "gc")
+    val failures = parkedAppends(td, Seq(
+      Seq(Seq[Any](1, 1.0)), Seq(Seq[Any](2, 2.0)),
+      Seq(Seq[Any](1, 3.0)), Seq(Seq[Any](3, 4.0))))
+    assert(failures.forall(_.isEmpty), failures)
+    val files = appendFiles("gc")
+    assert(files.length == 1, files)
+    val file = spark.read.parquet(files.head.toString)
+    assert(file.count() == 4)
+    assert(file.select("__seq").collect().map(_.getLong(0) / 1000000L)
+      .distinct.length == 1)
+    assert(engine.catalog.writeVersion(td) == 1)
+    // the later arrival wins last-write-wins for the shared key 1
+    assert(engine.execute("select * from s.gc").collect().toSeq ==
+      Seq(Row(1, 3.0), Row(2, 2.0), Row(3, 4.0)))
+  }
+
+  test("group commit splits at the 1M-row and byte bounds") {
+    engine.execute("create table s.gcrows(k int, primary key(k))")
+    val rowsTd = engine.catalog.getSchema("s", "gcrows")
+    val half = Seq.fill(500000)(Seq[Any](1)) // shared row instance
+    assert(parkedAppends(rowsTd, Seq(half, half)).forall(_.isEmpty))
+    // 500k + 500k reaches the 1M cap: two commits
+    assert(appendFiles("gcrows").length == 2)
+    assert(engine.catalog.writeVersion(rowsTd) == 2)
+
+    engine.execute("create table s.gcbytes(k int, t text, primary key(k))")
+    val bytesTd = engine.catalog.getSchema("s", "gcbytes")
+    val mb = "x" * 1048576
+    def batch(from: Int, n: Int) = (from until from + n).map(i => Seq[Any](i, mb))
+    // ~6.3 MB + ~3.1 MB fit under the 10 MB bound; the next ~6.3 MB does not
+    assert(parkedAppends(bytesTd,
+      Seq(batch(0, 6), batch(6, 3), batch(9, 6))).forall(_.isEmpty))
+    val perFile = appendFiles("gcbytes")
+      .map(f => spark.read.parquet(f.toString).count()).sorted
+    assert(perFile == Seq(6L, 9L))
+    assert(engine.execute("select k from s.gcbytes").collect().length == 15)
+  }
+
+  test("a failed group write fails every member and leaves no file") {
+    engine.execute("create table s.gcfail(k int, v double, primary key(k))")
+    val td = engine.catalog.getSchema("s", "gcfail")
+    val failures = parkedAppends(td, Seq(
+      Seq(Seq[Any](1, 1.0)),
+      Seq(Seq[Any](2, new java.util.Date())), // no parquet mapping
+      Seq(Seq[Any](3, 3.0))))
+    assert(failures.forall(_.exists(_.isInstanceOf[OtError])), failures)
+    val dataDir = java.nio.file.Paths.get(engine.warehouse, "s", "gcfail", "data")
+    val left = if (!Files.isDirectory(dataDir)) Nil
+      else Files.list(dataDir).iterator.asScala.map(_.getFileName.toString).toSeq
+    assert(left.isEmpty, s"no part or .inprogress staging file may remain: $left")
+    // the next commit still lands
+    engine.execute("insert into s.gcfail values(4, 4.0)")
+    assert(engine.execute("select * from s.gcfail").collect().toSeq ==
+      Seq(Row(4, 4.0)))
+  }
+
+  test("DROP TABLE while 4 threads insert leaves no table and no stray directory") {
+    engine.execute("create table s.racing(k int, v double, primary key(k))")
+    val td = engine.catalog.getSchema("s", "racing")
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    // each insert is bound before the DROP and commits after it: the
+    // commit lock is parked until the DROP (which re-enters it on this
+    // thread) has run
+    engine.catalog.withCommitLock("s", "racing") {
+      val threads = (0 until 4).map { t =>
+        val th = new Thread(() =>
+          try engine.execute(s"insert into s.racing values($t, 1.0)")
+          catch { case e: Throwable => failures.add(e) })
+        th.start()
+        th
+      }
+      while (engine.catalog.queuedAppends(td) < 4 && threads.forall(_.isAlive))
+        Thread.onSpinWait()
+      assert(engine.catalog.queuedAppends(td) == 4)
+      engine.execute("drop table s.racing")
+      threads
+    }.foreach(_.join())
+    assert(failures.size == 4)
+    failures.asScala.foreach { e =>
+      assert(e.isInstanceOf[OtError] &&
+        e.getMessage.contains("s.racing does not exists"), e)
+    }
+    assert(!engine.catalog.hasTable("s", "racing"))
+    assert(!Files.exists(java.nio.file.Paths.get(engine.warehouse, "s", "racing")))
+  }
+
+  test("inserts bound before DROP fail alone when the table is re-created in another shape") {
+    engine.execute("create table s.reborn(k int, v double, primary key(k))")
+    val td = engine.catalog.getSchema("s", "reborn")
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def insert(sql: String): Thread = {
+      val th = new Thread(() =>
+        try engine.execute(sql) catch { case e: Throwable => failures.add(e) })
+      th.start()
+      th
+    }
+    def awaitQueued(n: Int, threads: Seq[Thread]): Unit = {
+      while (engine.catalog.queuedAppends(td) < n && threads.forall(_.isAlive))
+        Thread.onSpinWait()
+      assert(engine.catalog.queuedAppends(td) == n)
+    }
+    // two inserts bound to the old table queue ahead of one bound to the
+    // re-created table; all three commit once the lock is released
+    engine.catalog.withCommitLock("s", "reborn") {
+      val stale = (0 until 2).map(t => insert(s"insert into s.reborn values($t, 1.0)"))
+      awaitQueued(2, stale)
+      engine.execute("drop table s.reborn")
+      engine.execute("create table s.reborn(k text, n int, w bigint, primary key(k))")
+      val fresh = insert("insert into s.reborn values('a', 1, 2)")
+      awaitQueued(3, stale :+ fresh)
+      stale :+ fresh
+    }.foreach(_.join())
+    assert(failures.size == 2, failures)
+    failures.asScala.foreach { e =>
+      assert(e.isInstanceOf[OtError] &&
+        e.getMessage.contains("s.reborn does not exists"), e)
+    }
+    assert(engine.execute("select * from s.reborn").collect().toSeq ==
+      Seq(Row("a", 1, 2L)))
+  }
+
+  test("a clean-table read beside a commit returns one row per key") {
+    import spark.implicits._
+    engine.importTable("s", "cleanrace",
+      (1 to 4).map(i => (i, i * 1.0)).toDF("k", "v"), Seq("k"))
+    val td = engine.catalog.getSchema("s", "cleanrace")
+    def all = engine.execute("select * from s.cleanrace").collect().toSeq
+    // a rewrite of an imported key queued on the parked commit lock: the
+    // SELECT before the release sees the import, the one after the rewrite
+    val insert = new Thread(() =>
+      engine.execute("insert into s.cleanrace values(3, 30.0)"))
+    engine.catalog.withCommitLock("s", "cleanrace") {
+      insert.start()
+      while (engine.catalog.queuedAppends(td) < 1 && insert.isAlive)
+        Thread.onSpinWait()
+      assert(all == (1 to 4).map(i => Row(i, i * 1.0)))
+    }
+    insert.join()
+    assert(all == Seq(Row(1, 1.0), Row(2, 2.0), Row(3, 30.0), Row(4, 4.0)))
+    // a commit that lands between the clean check and the end of the
+    // file listing sends the read down the LWW path
+    engine.catalog.compact(td)
+    assert(engine.catalog.whileClean(td)("listed").contains("listed"))
+    assert(engine.catalog.whileClean(td) {
+      engine.catalog.appendRows(td, Seq(Seq[Any](2, 20.0)))
+      "listed"
+    }.isEmpty)
+    assert(all == Seq(Row(1, 1.0), Row(2, 20.0), Row(3, 30.0), Row(4, 4.0)))
+  }
+
+  test("an adjusted SELECT after an acked _adj_ insert sees the new factor") {
+    engine.execute("create database sa")
+    engine.execute("create table sa.bar(a int, b timestamp, c double, primary key(a, b))")
+    for (b <- Seq(0, 4)) engine.execute(s"insert into sa.bar values(1, $b, 1.0)")
+    def adjusted = engine.execute("select b, adj(c) from sa.bar where a=1")
+      .collect().map(_.getDouble(1)).toSeq
+    val adjTd = engine.catalog.getSchema("sa", "_adj_")
+    val insert = new Thread(() =>
+      engine.execute("insert into sa._adj_ values(1, 3, 0.5, 2)"))
+    engine.catalog.withCommitLock("sa", "_adj_") {
+      insert.start()
+      while (engine.catalog.queuedAppends(adjTd) < 1 && insert.isAlive)
+        Thread.onSpinWait()
+      // resolved between the insert's bind and its commit: caches the
+      // factors as they were before it
+      assert(adjusted == Seq(1.0, 1.0))
+    }
+    insert.join() // the insert is acked
+    assert(adjusted == Seq(0.5, 1.0))
   }
 }
