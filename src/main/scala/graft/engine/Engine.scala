@@ -93,10 +93,14 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
   /** Parse, resolve and bind run under the engine monitor, so the
     * per-call db overrides ([[executeWithDb]]/[[executeWireNs]]) can
     * never bleed into a concurrent caller's name resolution; so do
-    * DELETE and DDL. An INSERT's rows commit after the monitor is
-    * released, through [[Catalog.appendRows]], where concurrent inserts
-    * into one table share a group commit. The returned DataFrame's
-    * execution takes no lock.
+    * DELETE, DDL and table functions (their eager rounds included), and
+    * the `_adj_` factor lookup of an adjusted SELECT. A SELECT's read
+    * and an INSERT's commit run after the monitor is released: the read
+    * through the catalog (a small table is read on this thread with no
+    * Spark job, [[Catalog.readTableLocal]]), the commit through
+    * [[Catalog.appendRows]], where concurrent inserts into one table
+    * share a group commit. The returned DataFrame's execution takes no
+    * lock.
     */
   def execute(sql: String, args: Seq[Any] = Nil,
       user: Option[User] = None): DataFrame =
@@ -104,17 +108,18 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
 
   /** The one statement path of every entry point: `bind` runs under the
     * engine monitor with the current db overridden by `db` (when
-    * non-empty); a bound INSERT then commits without the monitor.
+    * non-empty); then, without the monitor, a bound SELECT reads and a
+    * bound INSERT commits. Every other statement ran inside `bind`.
     */
   private def bindThenCommit(db: String)(
-      bind: => Either[DataFrame, Commit]): DataFrame = {
+      bind: => Either[() => DataFrame, Commit]): DataFrame = {
     val bound = this.synchronized {
       val prev = currentDb
       if (db != null && db.nonEmpty) currentDb = db
       try bind finally currentDb = prev
     }
     bound match {
-      case Left(df) => df
+      case Left(read) => read()
       case Right(Commit(td, rows)) =>
         catalog.appendRows(td, rows)
         // once the rows are visible (until then the cached factors are
@@ -127,59 +132,65 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
   }
 
   /** Parse, resolve and bind one statement (under the engine monitor):
-    * an INSERT yields its bound rows; every other statement runs here
-    * and yields its DataFrame (empty for DELETE and DDL).
+    * an INSERT yields its bound rows and a SELECT its read; every other
+    * statement runs here and yields its DataFrame (empty for DELETE and
+    * DDL).
     */
   private def bindStatement(sql: String, args: Seq[Any], user: Option[User],
-      keepNs: Boolean): Either[DataFrame, Commit] =
+      keepNs: Boolean): Either[() => DataFrame, Commit] =
     Parser.parse(sql) match {
       case s: Insert => Right(bindInsert(resolveInsert(s, user), Seq(args)))
-      case s: Select => Left(executeSelect(resolveSelect(s, user), args, keepNs))
-      case s: SelectFn => Left(executeTableFn(s, args, user))
+      case s: Select => Left(bindSelect(resolveSelect(s, user), args, keepNs))
+      case s: SelectFn =>
+        val df = executeTableFn(s, args, user)
+        Left(() => df)
       case s: Delete =>
         val r = resolveDelete(s, user)
         if (r.td.tblName == "_adj_") adjCache.remove(r.td.dbName)
         executeDelete(r, args)
-        Left(emptyDf)
+        ran
       case CreateDatabase(ine, name) =>
         if (user.exists(!_.isAdmin)) throw OtError("No permisssion")
         if (!(ine && catalog.hasDatabase(name))) catalog.createDatabase(name)
-        Left(emptyDf)
+        ran
       case CreateTable(ine, tblName, cols, keys) =>
         val db = resolveDbName(tblName)
         if (getPerm(dbOrCurrent(tblName), "", user) != Perm.Writable)
           throw OtError("No permisssion")
         if (!(ine && catalog.hasTable(db, tblName.table)))
           createTableChecked(db, tblName.table, cols, keys)
-        Left(emptyDf)
+        ran
       case DropDatabase(name) =>
         if (user.exists(!_.isAdmin)) throw OtError("No permisssion")
         catalog.dropDatabase(name)
         adjCache.remove(name)
-        Left(emptyDf)
+        ran
       case DropTable(tbl) =>
         val db = resolveDbName(tbl)
         if (getPerm(db, tbl.table, user) != Perm.Writable)
           throw OtError("No permisssion")
         if (tbl.table == "_adj_") adjCache.remove(db)
         catalog.dropTable(db, tbl.table)
-        Left(emptyDf)
+        ran
       case RenameTable(tbl, to) =>
         val td = tableSchema(tbl)
         if (getPerm(td.dbName, td.tblName, user) != Perm.Writable)
           throw OtError("No permisssion")
         catalog.renameTable(td.dbName, td.tblName, to)
-        Left(emptyDf)
+        ran
       case RenameColumn(tbl, from, to) =>
         val td = tableSchema(tbl)
         if (getPerm(td.dbName, td.tblName, user) != Perm.Writable)
           throw OtError("No permisssion")
         catalog.renameColumn(td.dbName, td.tblName, from, to)
-        Left(emptyDf)
+        ran
     }
 
+  /** What [[bindStatement]] yields for a statement it already ran. */
+  private val ran: Either[() => DataFrame, Commit] = Left(() => emptyDf)
+
   private def bindBatch(sql: String, argsArray: Seq[Seq[Any]],
-      user: Option[User]): Either[DataFrame, Commit] =
+      user: Option[User]): Either[() => DataFrame, Commit] =
     Parser.parse(sql) match {
       case s: Insert => Right(bindInsert(resolveInsert(s, user), argsArray))
       case _ => throw OtError("Only insert can be batched")
@@ -226,7 +237,7 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     * evicts on a janitor interval; this is the allocation-free analog).
     */
   def executeCached(sql: String, args: Seq[Any] = Nil, ttlMs: Long = 1000,
-      user: Option[User] = None, maxCacheRows: Int = 10000,
+      user: Option[User] = None, maxCacheRows: Int = Catalog.MaxHeldRows,
       proto: String = "", db: String = "", wireNs: Boolean = false,
       maxCacheEntries: Int = 1000): DataFrame = {
     // the user joins the key so a cached result is never served across
@@ -667,17 +678,29 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     preds.reduceOption(_ && _)
   }
 
-  private def executeSelect(s: SelectS, args: Seq[Any],
-      keepNs: Boolean = false): DataFrame = {
+  /** Bind a SELECT's placeholders and look up the `_adj_` factors an
+    * adjusted SELECT applies (under the engine monitor, where a committed
+    * `_adj_` insert invalidates them); the returned read runs outside it.
+    */
+  private def bindSelect(s: SelectS, args: Seq[Any],
+      keepNs: Boolean): () => DataFrame = {
     checkArity(s.nPlaceholders, args)
     val conds = bindConds(s.td, s.conds, args)
+    val factors = if (s.adjs.isEmpty) Map.empty[Int, Array[Adj.Factor]]
+      else adjFactors(s.td.dbName)
+    () => readSelect(s, conds, factors, keepNs)
+  }
+
+  private def readSelect(s: SelectS, conds: Seq[Cond],
+      factors: Map[Int, Array[Adj.Factor]], keepNs: Boolean): DataFrame = {
     // presentation order = PK order, reversed by negative limit
-    // (reference query.go:158, 359-365). On a CLEAN table the compacted
-    // layout already delivers that order file-by-file with no sort or
-    // Exchange in the plan (Catalog.readTableOrdered); only dirty tables
-    // (or clean reads the ordered path declines) pay an explicit sort.
-    val ordered = catalog.readTableOrdered(s.td, s.reverse,
-      condsToSourceFilters(s.td, conds))
+    // (reference query.go:158, 359-365). A small table is read, filtered,
+    // sorted and deduped on this thread (Catalog.readTableLocal). On a
+    // CLEAN table the compacted layout already delivers that order
+    // file-by-file with no sort or Exchange in the plan
+    // (Catalog.readTableOrdered); only dirty tables (or clean reads the
+    // ordered path declines) pay an explicit sort.
+    val pushed = condsToSourceFilters(s.td, conds)
     val pred = condsToPredicate(s.td, conds)
     // ns remainder columns ride along for predicates/sort; the final
     // projection (logical columns only) drops them. Dirty tables take
@@ -685,16 +708,15 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     // window-then-global-sort fallback paid two exchanges — see
     // Catalog.readTableOrderedDirty); the PK predicate moves inside it
     // so parquet pushdown still prunes before the exchange.
-    var df = ordered match {
-      case Some(d) => pred.map(d.filter).getOrElse(d)
-      case None => catalog.readTableOrderedDirty(s.td, s.reverse, pred)
-    }
+    var df = catalog.readTableLocal(s.td, s.reverse, pushed, pred)
+      .orElse(catalog.readTableOrdered(s.td, s.reverse, pushed)
+        .map(d => pred.map(d.filter).getOrElse(d)))
+      .getOrElse(catalog.readTableOrderedDirty(s.td, s.reverse, pred))
     if (s.limit > 0) df = df.limit(s.limit)
     // projection incl. adj application (reference adj.go:142-202)
     val proj: Seq[Column] =
       if (s.adjs.isEmpty) s.cols.map(c => col(c.name))
       else {
-        val factors = adjFactors(s.td.dbName)
         val bc = spark.sparkContext.broadcast(factors)
         val secCol = col(s.td.keys.head.name)
         val tmCol = col(s.td.keys.last.name)

@@ -118,4 +118,15 @@ object LocalParquet {
         throw e
     }
   }
+
+  /** Rows of the parquet file at `file`, from its footer alone (no Hadoop
+    * Configuration, as for [[write]]).
+    */
+  def rowCount(file: Path): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(file),
+      org.apache.parquet.ParquetReadOptions.builder(
+        new org.apache.parquet.conf.PlainParquetConfiguration()).build())
+    try r.getRecordCount finally r.close()
+  }
 }

@@ -52,31 +52,13 @@ object OrderedParquetScan {
         FilePartition(i, Array(toPartitionedFile(f)))
       }
       else pack(ordered, maxPartitionBytes)
-    // VECTORIZED reading where the schema supports it (round-11 scan
-    // profile: the row-based reader was the dominant component of the
-    // ordered-scan wall — decoding column-by-column into batches and
-    // flattening batch→row below is measurably faster than the
-    // record-at-a-time parquet-mr path, and row order is unchanged:
-    // batches arrive in file order and rowIterator preserves in-batch
-    // order). `spark.graft.orderedScan.vectorized=false` restores the
-    // row-based reader for A/B profiling.
-    val vectorized = spark.conf
-      .get("spark.graft.orderedScan.vectorized", "true").toBoolean &&
-      GraftSqlShims.parquetSupportsBatch(spark, schema)
-    val readFn = GraftSqlShims.parquetReader(spark, schema, schema,
-      pushedFilters, Map("returning_batch" -> vectorized.toString),
-      GraftSqlShims.hadoopConf(spark))
+    val readFn = reader(spark, schema, pushedFilters)
     val scan = new FileScanRDD(spark, readFn, parts, schema)
     val rev = reverse
     val rows = scan.mapPartitions { it =>
+      // UnsafeRow out, for the downstream operators that require it
       val proj = UnsafeProjection.create(schema)
-      // the reader may emit ColumnarBatch (vectorized path) disguised as
-      // InternalRow — flatten it, then project to UnsafeRow for the
-      // downstream operators that require it
-      val flat = it.asInstanceOf[Iterator[Any]].flatMap {
-        case b: ColumnarBatch => b.rowIterator().asScala
-        case r: InternalRow => Iterator.single(r)
-      }
+      val flat = flatten(it)
       if (rev)
         // one file per partition; rows are PK-ascending within the file,
         // so exact per-file reversal needs no comparator — buffer copies
@@ -86,6 +68,64 @@ object OrderedParquetScan {
     }
     GraftSqlShims.internalDf(spark, rows, schema)
   }
+
+  /** Visit the rows of `files` in file order on the calling thread — no
+    * Spark job — until `visit` returns false; returns whether every row
+    * was visited. Same reader and pushed filters as [[read]]. Rows are
+    * reused buffers: `visit` copies what it keeps.
+    */
+  def scanLocal(spark: SparkSession, files: Seq[FileMeta], schema: StructType,
+      pushedFilters: Seq[Filter])(visit: InternalRow => Boolean): Boolean = {
+    val readFn = reader(spark, schema, pushedFilters)
+    files.forall { f =>
+      val it = readFn(toPartitionedFile(f))
+      var drained = false
+      try { drained = flatten(it).forall(visit); drained }
+      finally if (!drained) release(it)
+    }
+  }
+
+  /** Release a file's reader left undrained — stopped early, or `visit`
+    * or the reader threw. A reader closes itself once drained, and
+    * outside a task no completion listener closes it; the vectorized
+    * reader's iterator is Closeable, the row-based one can only be
+    * drained (best effort: after a failure it may fail again).
+    */
+  private def release(it: Iterator[InternalRow]): Unit = it match {
+    case c: java.io.Closeable => c.close()
+    case rest => try rest.foreach(_ => ()) catch {
+      case scala.util.control.NonFatal(_) =>
+    }
+  }
+
+  /** The parquet read function for `schema`. VECTORIZED reading where the
+    * schema supports it (round-11 scan profile: the row-based reader was
+    * the dominant component of the ordered-scan wall — decoding
+    * column-by-column into batches and flattening batch→row is
+    * measurably faster than the record-at-a-time parquet-mr path, and
+    * row order is unchanged: batches arrive in file order and
+    * rowIterator preserves in-batch order).
+    * `spark.graft.orderedScan.vectorized=false` restores the row-based
+    * reader for A/B profiling.
+    */
+  private def reader(spark: SparkSession, schema: StructType,
+      pushedFilters: Seq[Filter]): PartitionedFile => Iterator[InternalRow] = {
+    val vectorized = spark.conf
+      .get("spark.graft.orderedScan.vectorized", "true").toBoolean &&
+      GraftSqlShims.parquetSupportsBatch(spark, schema)
+    GraftSqlShims.parquetReader(spark, schema, schema,
+      pushedFilters, Map("returning_batch" -> vectorized.toString),
+      GraftSqlShims.hadoopConf(spark))
+  }
+
+  /** The reader may emit ColumnarBatch (vectorized path) disguised as
+    * InternalRow — flatten it to rows.
+    */
+  private def flatten(it: Iterator[InternalRow]): Iterator[InternalRow] =
+    it.asInstanceOf[Iterator[Any]].flatMap {
+      case b: ColumnarBatch => b.rowIterator().asScala
+      case r: InternalRow => Iterator.single(r)
+    }
 
   /** Pack consecutive files into partitions up to `maxBytes`, preserving
     * order (never splitting a file — a split would interleave its rows

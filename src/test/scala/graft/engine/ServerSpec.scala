@@ -3,6 +3,7 @@ package graft.engine
 import graft.SparkTestSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end wire protocol: DDL/DML/select through the TCP server and
   * async client SDK, prepared statements + batch insert, meta commands,
@@ -374,6 +375,76 @@ class ServerSpec extends AnyFunSuite {
       assert(got.toMap == want)
       assert(got.length == want.size)
     } finally conns.foreach(_.close())
+  }
+
+  test("reads beside appends and group commits: one row per key, never older than an acked write") {
+    client.execute("create database if not exists net")
+    client.execute("create table net.rw(k int, v double, primary key(k))")
+    val nKeys = 16
+    val rounds = 16
+    val writer = new NetClient("127.0.0.1", server.boundPort)
+    val readers = (0 until 2).map(c => new NetClient("127.0.0.1",
+      server.boundPort, protocol = if (c == 0) "json" else "bson"))
+    // acked(k): the newest version of key k whose write was acked
+    val acked = new java.util.concurrent.atomic.AtomicIntegerArray(nKeys)
+    val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def await[A](f: scala.concurrent.Future[A]): A =
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration("60s"))
+    def check(cond: Boolean, msg: => String): Unit =
+      if (!cond) failures.add(new AssertionError(msg))
+    try {
+      val pid = writer.prepare("insert into net.rw values(?, ?)")
+      writer.batchInsert(pid, (0 until nKeys).map(k => Seq[Any](k, 0.0)))
+      // version r of every key: an append of all keys on even rounds,
+      // all keys' single-row inserts outstanding at once on odd rounds
+      val w = new Thread(() => try {
+        for (r <- 1 to rounds) {
+          val rows = (0 until nKeys).map(k => Seq[Any](k, r.toDouble))
+          if (r % 2 == 0) writer.batchInsert(pid, rows)
+          else rows.map(writer.executeAsync("insert into net.rw values(?, ?)", _))
+            .foreach(await(_))
+          (0 until nKeys).foreach(acked.set(_, r))
+        }
+      } catch { case e: Throwable => failures.add(e) }
+      finally writing.set(false))
+      // each reader alternates point gets and full scans until the writer
+      // is done, and reads at least 8 times
+      val rs = readers.zipWithIndex.map { case (c, ci) =>
+        new Thread(() => try {
+          var i = 0
+          while (writing.get() || i < 8) {
+            val floor = (0 until nKeys).map(acked.get)
+            if (i % 2 == 0) {
+              val k = (i / 2 + ci * 5) % nKeys
+              val got = c.execute("select * from net.rw where k=?", Seq(k))
+              check(got.length == 1 && got.head.head.asInstanceOf[Number].intValue == k,
+                s"point get of $k: $got")
+              got.foreach { row =>
+                val v = row(1).asInstanceOf[Number].doubleValue
+                check(v >= floor(k) && v <= rounds, s"key $k read $v after ${floor(k)} was acked")
+              }
+            } else {
+              val got = c.execute("select * from net.rw")
+              check(got.map(_.head.asInstanceOf[Number].intValue) == (0 until nKeys),
+                s"scan must hold each key once, in order: $got")
+              got.foreach { row =>
+                val k = row.head.asInstanceOf[Number].intValue
+                val v = row(1).asInstanceOf[Number].doubleValue
+                check(k < 0 || k >= nKeys || (v >= floor(k) && v <= rounds),
+                  s"key $k read $v after ${floor(k)} was acked")
+              }
+            }
+            i += 1
+          }
+        } catch { case e: Throwable => failures.add(e) })
+      }
+      (w +: rs).foreach(_.start())
+      (w +: rs).foreach(_.join())
+      assert(failures.isEmpty, failures.asScala.take(5).mkString("\n"))
+      assert(client.execute("select * from net.rw").map(r =>
+        r(1).asInstanceOf[Number].doubleValue) == Seq.fill(nKeys)(rounds.toDouble))
+    } finally (writer +: readers).foreach(_.close())
   }
 
   test("a run INSERT, DELETE or DDL replies null on JSON and BSON") {

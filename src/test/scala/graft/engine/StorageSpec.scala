@@ -31,6 +31,9 @@ class StorageSpec extends AnyFunSuite {
       .toSeq.sortBy(_._1)
   }
 
+  private def sparkRead[A](tbl: String)(body: => A): A =
+    SparkReads.forced(spark, engine.warehouse, "s", tbl)(body)
+
   test("delete writes deletion vectors and rewrites no data file") {
     engine.execute("create table s.dv(a int, b double, primary key(a))")
     // several batches = several data files
@@ -119,17 +122,21 @@ class StorageSpec extends AnyFunSuite {
     val shuffled = Seq(5, 2, 9, 1, 7, 3, 8, 4, 6, 10)
       .map(i => (i, i * 1.5)).toDF("k", "v")
     engine.importTable("s", "ord", shuffled, Seq("k"))
-    val df = engine.execute("select * from s.ord")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"plan has Exchange:\n$plan")
-    assert(!plan.toLowerCase.contains("sortexec") && !plan.contains("Sort "),
-      s"plan has Sort:\n$plan")
-    assert(df.collect().map(_.getInt(0)).toSeq == (1 to 10))
-    // reverse presentation via negative limit, still no Exchange
-    val rev = engine.execute("select * from s.ord limit -3")
-    val rplan = rev.queryExecution.executedPlan.toString
-    assert(!rplan.contains("Exchange"), s"reverse plan has Exchange:\n$rplan")
-    assert(rev.collect().map(_.getInt(0)).toSeq == Seq(10, 9, 8))
+    sparkRead("ord") {
+      val df = engine.execute("select * from s.ord")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("LocalTableScan"), s"not a Spark read:\n$plan")
+      assert(!plan.contains("Exchange"), s"plan has Exchange:\n$plan")
+      assert(!plan.toLowerCase.contains("sortexec") && !plan.contains("Sort "),
+        s"plan has Sort:\n$plan")
+      assert(df.collect().map(_.getInt(0)).toSeq == (1 to 10))
+      // reverse presentation via negative limit, still no Exchange
+      val rev = engine.execute("select * from s.ord limit -3")
+      val rplan = rev.queryExecution.executedPlan.toString
+      assert(!rplan.contains("LocalTableScan"), s"not a Spark read:\n$rplan")
+      assert(!rplan.contains("Exchange"), s"reverse plan has Exchange:\n$rplan")
+      assert(rev.collect().map(_.getInt(0)).toSeq == Seq(10, 9, 8))
+    }
     // an append dirties the table; results stay correct via the sort path
     engine.execute("insert into s.ord values(0, 0.5)")
     assert(engine.execute("select * from s.ord").collect()
@@ -170,23 +177,26 @@ class StorageSpec extends AnyFunSuite {
     val nFiles = java.nio.file.Files.list(dataDir).filter(
       _.getFileName.toString.endsWith(".parquet")).count()
     assert(nFiles > 100, s"expected many files, got $nFiles")
-    val out = engine.execute("select * from s.many")
-    val plan = out.queryExecution.executedPlan.toString
-    // one scan node regardless of file count: no per-file union chain,
-    // no Exchange, no Sort
-    assert(!plan.contains("Union"), s"plan has per-file Union:\n$plan")
-    assert(!plan.contains("Exchange"), s"plan has Exchange:\n$plan")
-    assert(plan.linesIterator.size < 12,
-      s"plan must stay flat at $nFiles files:\n$plan")
-    assert(out.collect().map(_.getInt(0)).toSeq == (1 to 2000))
-    // reverse presentation across file boundaries
-    assert(engine.execute("select * from s.many limit -5").collect()
-      .map(_.getInt(0)).toSeq == Seq(2000, 1999, 1998, 1997, 1996))
-    // pushed-down point/range predicates stay exact through the scan
-    assert(engine.execute("select v from s.many where k=1234").collect()
-      .map(_.getDouble(0)).toSeq == Seq(617.0))
-    assert(engine.execute("select k from s.many where k>=1995 and k<1999")
-      .collect().map(_.getInt(0)).toSeq == Seq(1995, 1996, 1997, 1998))
+    sparkRead("many") {
+      val out = engine.execute("select * from s.many")
+      val plan = out.queryExecution.executedPlan.toString
+      // one scan node regardless of file count: no per-file union chain,
+      // no Exchange, no Sort
+      assert(!plan.contains("LocalTableScan"), s"not a Spark read:\n$plan")
+      assert(!plan.contains("Union"), s"plan has per-file Union:\n$plan")
+      assert(!plan.contains("Exchange"), s"plan has Exchange:\n$plan")
+      assert(plan.linesIterator.size < 12,
+        s"plan must stay flat at $nFiles files:\n$plan")
+      assert(out.collect().map(_.getInt(0)).toSeq == (1 to 2000))
+      // reverse presentation across file boundaries
+      assert(engine.execute("select * from s.many limit -5").collect()
+        .map(_.getInt(0)).toSeq == Seq(2000, 1999, 1998, 1997, 1996))
+      // pushed-down point/range predicates stay exact through the scan
+      assert(engine.execute("select v from s.many where k=1234").collect()
+        .map(_.getDouble(0)).toSeq == Seq(617.0))
+      assert(engine.execute("select k from s.many where k>=1995 and k<1999")
+        .collect().map(_.getInt(0)).toSeq == Seq(1995, 1996, 1997, 1998))
+    }
   }
 
   test("nanosecond PK fidelity: ns-distinct keys are distinct rows with exact bounds") {
@@ -286,12 +296,14 @@ class StorageSpec extends AnyFunSuite {
     engine.execute("create table s.bar(a int, b timestamp, c double, primary key(a, b))")
     for (b <- Seq(0, 2, 4))
       engine.execute(s"insert into s.bar values(1, $b, 1.0)")
-    val df = engine.execute("select b, adj(c) from s.bar where a=1")
-    val plan = df.queryExecution.executedPlan.toString
+    val (plan, got) = sparkRead("bar") {
+      val df = engine.execute("select b, adj(c) from s.bar where a=1")
+      (df.queryExecution.executedPlan.toString, df.collect().map(r =>
+        (r.getTimestamp(0).toInstant.getEpochSecond, r.getDouble(1))).toSeq)
+    }
+    assert(!plan.contains("LocalTableScan"), s"not a Spark read:\n$plan")
     assert(!plan.contains("ScalaUDF") && !plan.contains("BatchEval"),
       s"plan has a UDF node:\n$plan")
-    val got = df.collect().map(r =>
-      (r.getTimestamp(0).toInstant.getEpochSecond, r.getDouble(1))).toSeq
     assert(got == Seq((0L, 0.5), (2L, 0.5), (4L, 1.0)))
   }
 
@@ -498,5 +510,150 @@ class StorageSpec extends AnyFunSuite {
     }
     insert.join() // the insert is acked
     assert(adjusted == Seq(0.5, 1.0))
+  }
+}
+
+/** The SELECT read on the calling thread (`Catalog.readTableLocal`)
+  * against the Spark reads it stands in for: same rows in the same
+  * order on every SELECT shape, the 10,000-row fallback, and no Spark
+  * job where none is needed.
+  */
+class LocalReadSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+  private lazy val engine = {
+    val wh = Files.createTempDirectory("graft-local-wh").toString
+    val e = new Engine(spark, wh)
+    e.execute("create database lr")
+    e
+  }
+
+  /** Rows (ns companions kept) and Spark jobs of one wire SELECT. */
+  private def select(sql: String, args: Seq[Any]): (Seq[Row], Int) =
+    SparkJobs.count(spark)(
+      engine.executeWireNs(sql, args, None, "lr").collect().toSeq)
+
+  /** `sql` at default settings (the local read for a small table) and
+    * with the split size below the table's size (the Spark ordered or
+    * dirty read): both must return the same rows in the same order.
+    * Returns the rows and the jobs of each run.
+    */
+  private def bothPaths(tbl: String, sql: String,
+      args: Seq[Any] = Nil): (Seq[Row], Int, Int) = {
+    val (local, localJobs) = select(sql, args)
+    val (viaSpark, sparkJobs) =
+      SparkReads.forced(spark, engine.warehouse, "lr", tbl)(select(sql, args))
+    assert(local == viaSpark, s"$sql: local $local != spark $viaSpark")
+    assert(sparkJobs > 0, s"$sql: the lowered split must force a Spark read")
+    (local, localJobs, sparkJobs)
+  }
+
+  private def ts(us: Long, ns: Int): Seq[Long] = Seq(5L, us * 1000L + ns)
+
+  test("local and Spark reads agree on every SELECT shape") {
+    engine.execute("create table lr.d(sec int, tm timestamp, px double, primary key(sec, tm))")
+    val ins = "insert into lr.d values(?, ?, ?)"
+    // three appends: keys inside one µs differ by ns remainder only, and
+    // the later appends rewrite earlier keys
+    engine.batchInsert(ins, for (sec <- 1 to 3; us <- 0 until 4; ns <- Seq(0, 250, 500))
+      yield Seq[Any](sec, ts(us, ns), sec * 100.0 + us * 10 + ns / 250))
+    engine.batchInsert(ins, Seq(Seq[Any](2, ts(1, 250), -1.0), Seq[Any](2, ts(3, 0), -2.0)))
+    engine.execute(ins, Seq(2, ts(1, 250), -3.0))
+    val shapes = Seq(
+      "select * from lr.d where sec=2 and tm=?" -> Seq(ts(1, 250)),
+      "select * from lr.d where sec=2" -> Nil,
+      "select px from lr.d where sec=2 and tm>=? and tm<?" -> Seq(ts(1, 250), ts(3, 0)),
+      "select px from lr.d where sec=2 and tm>? and tm<=?" -> Seq(ts(1, 250), ts(3, 0)),
+      "select * from lr.d where sec=2 limit -4" -> Nil,
+      "select * from lr.d limit -5" -> Nil,
+      "select * from lr.d" -> Nil)
+    for ((sql, args) <- shapes) {
+      val (rows, localJobs, _) = bothPaths("d", sql, args)
+      assert(rows.nonEmpty, sql)
+      assert(localJobs == 0, s"$sql: a local read starts no Spark job")
+    }
+    val (point, _, _) = bothPaths("d", shapes.head._1, shapes.head._2)
+    assert(point == Seq(Row(2, java.sql.Timestamp.from(
+      java.time.Instant.ofEpochSecond(5L, 1000L)), -3.0, 250)))
+    val (rev, _, _) = bothPaths("d", "select px from lr.d where sec=2 limit -3")
+    assert(rev.map(_.getDouble(0)) == Seq(232.0, 231.0, -2.0))
+
+    // a clean (imported) table: the Spark side is the ordered scan
+    import spark.implicits._
+    engine.importTable("lr", "c", (1 to 50).map(i => (i % 5, i, i * 0.5))
+      .toDF("a", "b", "v"), Seq("a", "b"))
+    for (sql <- Seq("select * from lr.c where a=3", "select v from lr.c where a=2 and b>12 and b<=37",
+        "select * from lr.c limit -7")) {
+      val (rows, localJobs, _) = bothPaths("c", sql)
+      assert(rows.nonEmpty && localJobs == 0, sql)
+    }
+
+    // deletion vectors: both runs take the masking Spark read
+    engine.execute("create table lr.dv(k int, v double, primary key(k))")
+    for (k <- 1 to 6) engine.execute(s"insert into lr.dv values($k, $k.5)")
+    engine.execute("delete from lr.dv where k>=2 and k<4")
+    engine.execute("insert into lr.dv values(3, 9.5)")
+    val (dv, dvJobs, _) = bothPaths("dv", "select * from lr.dv")
+    assert(dv.map(_.getInt(0)) == Seq(1, 3, 4, 5, 6))
+    assert(dvJobs > 0)
+
+    // an adjusted column: factors apply the same on both paths
+    engine.execute("insert into lr._adj_ values(2, ?, 0.5, 2)", Seq(ts(2, 0)))
+    val adjSql = "select tm, adj(px) from lr.d where sec=2"
+    engine.execute(adjSql) // loads and caches the factors (a Spark job)
+    val (adj, adjJobs, _) = bothPaths("d", adjSql)
+    assert(adjJobs == 0)
+    assert(adj.map(_.getDouble(1)).take(3) == Seq(100.0, 100.5, 101.0))
+  }
+
+  test("a read matching more than 10,000 rows falls back to Spark, all rows in PK order") {
+    engine.execute("create table lr.big(k int, v bigint, primary key(k))")
+    val ins = "insert into lr.big values(?, ?)"
+    engine.batchInsert(ins, (0 until 12000).reverse.map(k => Seq[Any](k, k.toLong)))
+    engine.batchInsert(ins, Seq(Seq[Any](7, -7L), Seq[Any](11999, -1L)))
+    // unfiltered (declined on the footers' row counts) and filtered
+    // (declined once the 10,001st matching row version is read)
+    for (sql <- Seq("select * from lr.big", "select * from lr.big where k>=0")) {
+      val (rows, jobs) = select(sql, Nil)
+      assert(jobs > 0, s"$sql: more than MaxHeldRows rows take the Spark read")
+      assert(rows.map(_.getInt(0)) == (0 until 12000))
+      assert(rows(7).getLong(1) == -7L && rows(11999).getLong(1) == -1L)
+    }
+    // a range of the same table under the bound stays local
+    val (range, rangeJobs) = select("select * from lr.big where k>=5 and k<10", Nil)
+    assert(rangeJobs == 0)
+    assert(range.map(_.getLong(1)) == Seq(5L, 6L, -7L, 8L, 9L))
+  }
+
+  test("Spark reads of a dirty table know the file schema: building the read starts no job") {
+    engine.execute("create table lr.ks(k int, tm timestamp, v double, primary key(k, tm))")
+    for (k <- 1 to 3) engine.execute(s"insert into lr.ks values($k, $k, $k.5)")
+    engine.execute("delete from lr.ks where k=2")
+    val td = engine.catalog.getSchema("lr", "ks")
+    val (df, jobs) = SparkJobs.count(spark)(engine.catalog.readTableKeepNs(td))
+    assert(jobs == 0, "no schema-inference job for data or deletion vectors")
+    assert(df.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 3))
+  }
+
+  test("a local scan stopped by a throw closes the file it was reading") {
+    import graft.plans.OrderedParquetScan
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("k", IntegerType),
+      StructField("v", DoubleType)))
+    val f = Files.createTempDirectory("graft-scan").resolve("part-0.parquet")
+    LocalParquet.write(f, schema,
+      (1 to 100).iterator.map(k => Array[Any](k, k * 0.5)))
+    val files = Seq(OrderedParquetScan.FileMeta(f.toString, Files.size(f)))
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val before = os.getOpenFileDescriptorCount
+    // outside a task no completion listener closes a reader: a leak
+    // would hold one descriptor per scan
+    for (_ <- 1 to 200) intercept[IllegalStateException] {
+      OrderedParquetScan.scanLocal(spark, files, schema, Nil) { _ =>
+        throw new IllegalStateException("visit failed")
+      }
+    }
+    val after = os.getOpenFileDescriptorCount
+    assert(after - before < 100, s"open descriptors $before -> $after")
   }
 }
