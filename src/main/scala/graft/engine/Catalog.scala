@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths,
+  StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -37,10 +38,22 @@ import scala.jdk.CollectionConverters._
   * table's PHYSICAL column names (`phys.json`, fixed at CREATE TABLE) and
   * reads rename physical→logical, so files written before and after a
   * rename agree and no rewrite happens.
+  *
+  * DDL serializes on one catalog lock ([[ddl]]), writes to a table on its
+  * commit lock ([[withCommitLock]]); reads take neither.
   */
 final class Catalog(val spark: SparkSession, val warehouse: String) {
   val SeqCol = "__seq"
+  // the live TableDef per "db.tbl": set by create and renames, removed by
+  // drop, and filled on a miss, all under the DDL lock
   private val schemaCache = TrieMap.empty[String, TableDef]
+  private val ddlLock = new Object
+
+  /** Run `body` under the (reentrant) DDL lock, which every create, drop
+    * and rename and every [[getSchema]] miss takes; reads, appends and
+    * DELETE never do.
+    */
+  private[engine] def ddl[A](body: => A): A = ddlLock.synchronized(body)
 
   // ── nanosecond fidelity ──────────────────────────────────────────
   // Spark TimestampType is µs; the reference keys rows by (sec, nsec)
@@ -81,9 +94,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
 
   def hasDatabase(db: String): Boolean = Files.isDirectory(dbPath(db))
 
-  def createDatabase(db: String): Unit = {
-    if (hasDatabase(db)) throw OtError(s"Database $db already exists")
-    Files.createDirectories(dbPath(db))
+  def createDatabase(db: String): Unit = ddl {
+    Files.createDirectories(Paths.get(warehouse))
+    claim(dbPath(db), s"Database $db already exists")
     // every database gets its _adj_ table (reference schema.go:65,247-262)
     createTable(TableDef.build(db, "_adj_",
       Seq("sec" -> OtType.Int, "time" -> OtType.Timestamp,
@@ -91,7 +104,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       Seq("sec", "time")))
   }
 
-  def dropDatabase(db: String): Unit = {
+  def dropDatabase(db: String): Unit = ddl {
     if (!hasDatabase(db)) throw OtError(s"Database $db does not exist")
     listTables(db).foreach(t => dropTable(db, t))
     deleteRecursively(dbPath(db))
@@ -118,6 +131,11 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     else withStream(Files.list(p))(_.filter(Files.isDirectory(_))
       .map(_.getFileName.toString).toSeq.sorted)
 
+  /** Create `dir`, failing with `exists` if anything holds the name. */
+  private def claim(dir: Path, exists: String): Unit =
+    try Files.createDirectory(dir)
+    catch { case _: FileAlreadyExistsException => throw OtError(exists) }
+
   private def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {
       withStream(Files.walk(p))(_.toSeq).reverse.foreach(Files.delete)
@@ -129,43 +147,51 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
   def hasTable(db: String, tbl: String): Boolean =
     Files.isDirectory(tblPath(db, tbl))
 
-  def createTable(td: TableDef): Unit = {
+  /** Create the table under a new incarnation and return its TableDef. */
+  def createTable(td: TableDef): TableDef = ddl {
     if (!hasDatabase(td.dbName))
       throw OtError(s"Database ${td.dbName} does not exist")
-    if (hasTable(td.dbName, td.tblName))
-      throw OtError(s"Table ${td.dbName}.${td.tblName} already exists")
     val dir = tblPath(td.dbName, td.tblName)
-    Files.createDirectories(dir)
-    writeSchema(dir, td)
+    claim(dir, s"Table ${td.dbName}.${td.tblName} already exists")
     // physical parquet names are fixed forever at creation; renames only
-    // touch schema.json
+    // touch schema.json, whose presence marks the table complete
     writePhysNames(dir, td.cols.map(_.name))
+    val created = td.copy(incarnation =
+      java.util.concurrent.ThreadLocalRandom.current.nextLong(1, Long.MaxValue))
+    writeSchema(dir, created)
+    schemaCache.put(s"${td.dbName}.${td.tblName}", created)
+    created
   }
 
-  def dropTable(db: String, tbl: String): Unit = withCommitLock(db, tbl) {
+  def dropTable(db: String, tbl: String): Unit = ddl(withCommitLock(db, tbl) {
     // error string parity: "does not exists" [sic] (reference schema.go:356)
     if (!hasTable(db, tbl)) throw OtError(s"Table $db.$tbl does not exists")
     schemaCache.remove(s"$db.$tbl")
     deleteRecursively(tblPath(db, tbl))
-  }
+    published(db, tbl)
+  })
 
-  def getSchema(db: String, tbl: String): TableDef =
-    schemaCache.getOrElseUpdate(s"$db.$tbl", {
+  def getSchema(db: String, tbl: String): TableDef = {
+    val key = s"$db.$tbl"
+    schemaCache.getOrElse(key, ddl(schemaCache.getOrElseUpdate(key, {
       if (!hasTable(db, tbl)) throw OtError(s"Table $db.$tbl does not exists")
       readSchema(tblPath(db, tbl), db, tbl)
-    })
-
-  def renameTable(db: String, tbl: String,
-      to: String): Unit = withCommitLock(db, tbl) {
-    val td = getSchema(db, tbl)
-    schemaCache.remove(s"$db.$tbl")
-    Files.move(tblPath(db, tbl), tblPath(db, to),
-      StandardCopyOption.ATOMIC_MOVE)
-    writeSchema(tblPath(db, to), td.copy(tblName = to))
+    })))
   }
 
+  def renameTable(db: String, tbl: String,
+      to: String): Unit = ddl(withCommitLock(db, tbl) {
+    val td = getSchema(db, tbl)
+    Files.move(tblPath(db, tbl), tblPath(db, to),
+      StandardCopyOption.ATOMIC_MOVE)
+    schemaCache.remove(s"$db.$tbl")
+    schemaCache.put(s"$db.$to", td.copy(tblName = to))
+    published(db, tbl)
+    published(db, to)
+  })
+
   def renameColumn(db: String, tbl: String, from: String,
-      to: String): Unit = withCommitLock(db, tbl) {
+      to: String): Unit = ddl(withCommitLock(db, tbl) {
     val td = getSchema(db, tbl)
     if (!td.nameMap.contains(from)) throw OtError(s"Column $from does not exist")
     if (td.nameMap.contains(to)) throw OtError(s"Column $to already exists")
@@ -174,15 +200,16 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     // the phys↔logical mapping
     if (to.endsWith("__ns") || to == "__seq")
       throw OtError(s"Column name $to is reserved")
-    schemaCache.remove(s"$db.$tbl")
-    val cols = td.cols.map(c => if (c.name == from) c.copy(name = to) else c)
-    val keys = td.keyNames.map(k => if (k == from) to else k)
-    val nd = TableDef(db, tbl, cols, keys)
+    val nd = td.copy(
+      cols = td.cols.map(c => if (c.name == from) c.copy(name = to) else c),
+      keyNames = td.keyNames.map(k => if (k == from) to else k))
     writeSchema(tblPath(db, tbl), nd)
+    schemaCache.put(s"$db.$tbl", nd)
+    published(db, tbl)
     // data untouched: files keep the physical names recorded in phys.json
     // (fixed at CREATE TABLE), and both reads and future writes go through
     // that mapping — so files written before and after the rename agree
-  }
+  })
 
   // ── data ──
 
@@ -198,17 +225,18 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
   private def hasData(td: TableDef): Boolean = hasParquet(dataDir(td))
   private def hasDeletes(td: TableDef): Boolean = hasParquet(deletesDir(td))
 
-  /** Rename a file-schema DataFrame from physical to logical names (the
-    * recorded mapping is positional against td.cols; ns remainder
-    * columns follow their timestamp column's name).
+  /** Logical to physical column names (the recorded mapping is
+    * positional against td.cols; ns remainder columns follow their
+    * timestamp column's name).
     */
-  private def physToLogical(td: TableDef, df: DataFrame): DataFrame = {
-    val phys = physNames(td)
-    val logical = td.cols.map(_.name)
-    renameAll(df, phys.zip(logical).flatMap { case (p, l) =>
-      Seq(p -> l, nsCol(p) -> nsCol(l))
-    }.toMap)
-  }
+  private def physNameMap(td: TableDef): Map[String, String] =
+    td.cols.map(_.name).zip(physNames(td)).flatMap { case (l, p) =>
+      Seq(l -> p, nsCol(l) -> nsCol(p))
+    }.toMap
+
+  /** Rename a file-schema DataFrame from physical to logical names. */
+  private def physToLogical(td: TableDef, df: DataFrame): DataFrame =
+    renameAll(df, physNameMap(td).map(_.swap))
 
   /** Apply a whole column-rename mapping in ONE positional select —
     * chained withColumnRenamed would pass through intermediate states
@@ -290,14 +318,18 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     // rawData's parquet source lists data/ as it is built
     whileClean(td)(rawData(td)) match {
       case Some(df) => df.drop(SeqCol)
-      case None =>
-        val w = Window.partitionBy(keyColsWithNs(td).map(col): _*)
-          .orderBy(col(SeqCol).desc)
-        maskedData(td)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .drop("__rn", SeqCol)
+      case None => newestPerKey(td, maskedData(td)).drop(SeqCol)
     }
+
+  /** The newest version of each key in `df` (last-write-wins by a window
+    * over the PK incl. ns remainders, `__seq` descending).
+    */
+  private def newestPerKey(td: TableDef, df: DataFrame): DataFrame = {
+    val w = Window.partitionBy(keyColsWithNs(td).map(col): _*)
+      .orderBy(col(SeqCol).desc)
+    df.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+  }
 
   /** Range-ordered read of a CLEAN table with no sort in the plan: the
     * compacted/imported layout is `repartitionByRange` on the leading key
@@ -445,12 +477,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     // exchange (no sampling) is strictly cheaper. The byte gate keeps
     // this a small-table fast path — big logs take the sampled range
     // exchange that scales.
-    val logBytes = {
-      val d = dataDir(td)
-      if (!Files.isDirectory(d)) 0L
-      else withStream(Files.list(d))(_.map(p =>
-        try Files.size(p) catch { case _: Throwable => 0L }).sum)
-    }
+    val logBytes = dataFiles(td).map(p =>
+      try Files.size(p) catch { case _: Throwable => 0L }).sum
     val sorted =
       if (logBytes <= maxSplitBytes)
         base.repartition(1).sortWithinPartitions(sortCols: _*)
@@ -494,14 +522,10 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * Deletion vectors newer than `seq` are ignored, so travel before a
     * DELETE resurrects the rows.
     */
-  def readTableAsOf(td: TableDef, seq: Long): DataFrame = {
-    val w = Window.partitionBy(keyColsWithNs(td).map(col): _*)
-      .orderBy(col(SeqCol).desc)
-    maskedData(td, Some((seq + 1) * 1000000L)) // batch seqs pack row idx
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop(("__rn" +: SeqCol +: nsColNames(td)): _*)
-  }
+  def readTableAsOf(td: TableDef, seq: Long): DataFrame =
+    // batch seqs pack the row index
+    newestPerKey(td, maskedData(td, Some((seq + 1) * 1000000L)))
+      .drop((SeqCol +: nsColNames(td)): _*)
 
   /** The table's current commit counter (see [[readTableAsOf]]). */
   def writeVersion(td: TableDef): Long = currentSeq(td)
@@ -509,26 +533,28 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
   private def cleanMarker(td: TableDef): Path =
     tblPath(td.dbName, td.tblName).resolve("clean_at_seq")
 
-  private def currentSeq(td: TableDef): Long = {
-    val p = tblPath(td.dbName, td.tblName).resolve("seq")
-    if (Files.exists(p))
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong
-    else 0L
-  }
+  private def seqFile(td: TableDef): Path =
+    tblPath(td.dbName, td.tblName).resolve("seq")
+
+  /** The number a metadata file holds, 0 when it is absent. */
+  private def readLong(p: Path): Long =
+    if (!Files.exists(p)) 0L
+    else new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong
+
+  private def currentSeq(td: TableDef): Long = readLong(seqFile(td))
 
   /** `list` (a listing of `data/`) when the table is clean — no write
     * since the last compact/import — from before the listing to after
-    * it; None when dirty. Commits run outside the engine monitor and a
-    * commit claims its seq before it publishes its file, so an unchanged
-    * seq around the listing means the listing holds no newer file (and
-    * needs no LWW dedupe).
+    * it; None when dirty. Readers hold no commit lock, and a commit
+    * claims its seq before it publishes its file, so an unchanged seq
+    * around the listing means the listing holds no newer file (and needs
+    * no LWW dedupe).
     */
   private[engine] def whileClean[A](td: TableDef)(list: => A): Option[A] = {
     val m = cleanMarker(td)
     if (!Files.exists(m)) return None
     val seq = currentSeq(td)
-    if (new String(Files.readAllBytes(m), StandardCharsets.UTF_8).trim.toLong
-        != seq) return None
+    if (readLong(m) != seq) return None
     val listed = list
     if (currentSeq(td) == seq) Some(listed) else None
   }
@@ -537,8 +563,9 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     replaceFile(cleanMarker(td), currentSeq(td).toString)
 
   /** Replace a small metadata file by an atomic rename, so readers that
-    * hold no commit lock never see it truncated. Writers hold the
-    * table's commit lock, so the staging name is theirs alone.
+    * hold no lock never see it truncated. Writers of one file hold the
+    * lock that orders them (the commit lock for `seq` and `clean_at_seq`,
+    * the DDL lock for `schema.json`), so the staging name is theirs alone.
     */
   private def replaceFile(p: Path, content: String): Unit = {
     val tmp = p.resolveSibling("." + p.getFileName + ".tmp")
@@ -552,39 +579,33 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * reference is a single server process too).
     */
   private def nextSeq(td: TableDef): Long = {
-    val p = tblPath(td.dbName, td.tblName).resolve("seq")
-    val cur = if (Files.exists(p))
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong
-    else 0L
-    replaceFile(p, (cur + 1).toString)
-    cur + 1
+    val next = currentSeq(td) + 1
+    replaceFile(seqFile(td), next.toString)
+    next
   }
 
   /** Rename a logical-name DataFrame to physical names for writing. */
   private def logicalToPhys(td: TableDef, df: DataFrame): DataFrame =
-    renameAll(df, td.cols.map(_.name).zip(physNames(td)).flatMap {
-      case (l, p) => Seq(l -> p, nsCol(l) -> nsCol(p))
-    }.toMap)
+    renameAll(df, physNameMap(td))
 
-  /** Physical file schema: each Timestamp column is followed by its
-    * `__ns` remainder.
+  /** The table's schema under `names` (positional against td.cols): each
+    * Timestamp column is followed by its `__ns` remainder.
     */
-  private def physSchema(td: TableDef): StructType =
-    StructType(td.cols.zip(physNames(td)).flatMap { case (c, p) =>
-      val main = StructField(p, c.tpe.spark, nullable = !c.isKey)
+  private def schemaWithNs(td: TableDef, names: Seq[String]): StructType =
+    StructType(td.cols.zip(names).flatMap { case (c, n) =>
+      val main = StructField(n, c.tpe.spark, nullable = !c.isKey)
       if (c.tpe == OtType.Timestamp)
-        Seq(main, StructField(nsCol(p), IntegerType, nullable = !c.isKey))
+        Seq(main, StructField(nsCol(n), IntegerType, nullable = !c.isKey))
       else Seq(main)
     })
+
+  /** Physical file schema. */
+  private def physSchema(td: TableDef): StructType =
+    schemaWithNs(td, physNames(td))
 
   /** Logical schema incl. ns remainders (the rawData shape). */
   private def logicalSchemaWithNs(td: TableDef): StructType =
-    StructType(td.cols.flatMap { c =>
-      val main = StructField(c.name, c.tpe.spark, nullable = !c.isKey)
-      if (c.tpe == OtType.Timestamp)
-        Seq(main, StructField(nsCol(c.name), IntegerType, nullable = !c.isKey))
-      else Seq(main)
-    })
+    schemaWithNs(td, td.cols.map(_.name))
 
   /** Append whole rows (order matches td.cols); returns once they are
     * committed. One COMMIT — not one call — is one batch, one `__seq`
@@ -598,8 +619,11 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * commit does. Hence the 1M-row cap, per call and per group, which
     * keeps a batch from overflowing into the next batch's seq space and
     * corrupting LWW/time-travel ordering; a group also stays within
-    * [[Catalog.MaxBatchBytes]]. A failed write fails every call of its
-    * group and publishes no file.
+    * [[Catalog.MaxBatchBytes]] and to appends of one table incarnation:
+    * if the table was dropped or re-created since `td` was resolved, the
+    * commit fails with the missing-table error. A failed write fails every
+    * call of its group and publishes no file; a written one bumps the
+    * table's [[version]] before any call of its group returns.
     */
   def appendRows(td: TableDef, rows: Seq[Seq[Any]]): Unit = {
     if (rows.length >= Catalog.MaxBatchRows)
@@ -638,17 +662,29 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     if (me.error != null) throw me.error
   }
 
-  // per-table commit lock + queue of appends waiting on it; kept for the
-  // catalog's life (one small entry per table name ever written)
+  // per-table commit lock, queue of appends waiting on it and version;
+  // kept for the catalog's life (one small entry per table name ever used)
   private val commitLogs = TrieMap.empty[String, Catalog.CommitLog]
 
   private def commitLog(db: String, tbl: String): Catalog.CommitLog =
     commitLogs.getOrElseUpdate(s"$db.$tbl", new Catalog.CommitLog)
 
+  /** The table's version, bumped once a change to its rows or schema is
+    * visible: what is derived from the table after reading version v is
+    * current while the version is still v.
+    */
+  private[engine] def version(db: String, tbl: String): Long =
+    commitLog(db, tbl).version.get
+
+  private def published(db: String, tbl: String): Unit =
+    commitLog(db, tbl).version.incrementAndGet()
+
   /** Run `body` holding the table's commit lock: no append commits, and
     * no other holder drops, renames, deletes from or rewrites the table
-    * meanwhile. Lock order: the engine monitor (when held) before a
-    * commit lock, and one table's commit lock at a time.
+    * meanwhile. Lock order: the DDL lock (when taken) before a commit
+    * lock, and one table's commit lock at a time. So a commit-lock holder
+    * never waits on the DDL lock: a commit checks its table by
+    * [[tableNow]], not [[getSchema]].
     */
   private[engine] def withCommitLock[A](db: String, tbl: String)(body: => A): A = {
     val lock = commitLog(db, tbl).lock
@@ -661,11 +697,11 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     commitLog(td.dbName, td.tblName).queue.size
 
   /** Under the table's commit lock: take the queued appends from the head
-    * in arrival order while they were bound to the head's table shape and
+    * in arrival order while they were bound to the head's incarnation and
     * the group stays under both batch bounds, and write them as one file
     * under one seq with the head's TableDef. Every member learns the
-    * outcome. An append bound to another shape (its table was dropped
-    * and re-created meanwhile) heads a later group of its own.
+    * outcome. An append bound to another incarnation (its table was
+    * dropped and re-created meanwhile) heads a later group of its own.
     */
   private def commitGroup(log: Catalog.CommitLog): Unit = {
     // non-empty: the caller's own append stays queued until a commit
@@ -675,7 +711,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     var nRows = head.rows.length.toLong
     var nBytes = head.estBytes
     var next = log.queue.peek()
-    while (next != null && shape(next.td) == shape(head.td) &&
+    while (next != null && next.td.incarnation == head.td.incarnation &&
         nRows + next.rows.length < Catalog.MaxBatchRows &&
         nBytes + next.estBytes <= Catalog.MaxBatchBytes) {
       members += log.queue.poll()
@@ -684,22 +720,31 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       next = log.queue.peek()
     }
     val error =
-      try { writeBatch(head.td, members.iterator.flatMap(_.rows)); null }
-      catch { case e: Throwable => e }
+      try {
+        writeBatch(head.td, members.iterator.flatMap(_.rows))
+        published(head.td.dbName, head.td.tblName)
+        null
+      } catch { case e: Throwable => e }
     members.foreach { m => m.error = error; m.done = true }
   }
 
-  /** What a bound row's cells must match: column types and key flags. */
-  private def shape(td: TableDef): Seq[(OtType, Boolean)] =
-    td.cols.map(c => (c.tpe, c.isKey))
+  /** The table now named like `td`, read without the DDL lock: under the
+    * commit lock no DROP or RENAME of it runs, and CREATE writes the cache
+    * entry after `schema.json`, whole.
+    */
+  private def tableNow(td: TableDef): Option[TableDef] =
+    schemaCache.get(s"${td.dbName}.${td.tblName}").orElse {
+      val dir = tblPath(td.dbName, td.tblName)
+      if (!Files.exists(dir.resolve("schema.json"))) None
+      else Some(readSchema(dir, td.dbName, td.tblName))
+    }
 
   /** One commit: a new seq and one part file holding `rows`. */
   private def writeBatch(td: TableDef, rows: Iterator[Seq[Any]]): Unit = {
     // the table may have been dropped or renamed (and its name reused)
     // since the caller resolved it: fail rather than re-create a stray
-    // directory or write rows of another shape (getSchema throws for a
-    // missing table). A re-created table of the same shape takes the rows.
-    if (shape(getSchema(td.dbName, td.tblName)) != shape(td))
+    // directory or write into another table
+    if (!tableNow(td).exists(_.incarnation == td.incarnation))
       throw OtError(s"Table ${td.dbName}.${td.tblName} does not exists")
     val seq = nextSeq(td)
     val schema = physSchema(td).add(SeqCol, LongType, nullable = false)
@@ -767,6 +812,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     // a bulk import into an empty table IS its compacted form: reads can
     // skip the LWW window until the next append lands
     if (wasEmpty) markClean(td)
+    published(td.dbName, td.tblName)
   }
 
   /** Map logical column names (possibly incl. ns remainders) to their
@@ -774,9 +820,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     */
   private def logicalToPhysNames(td: TableDef,
       names: Seq[String]): Seq[String] = {
-    val m = td.cols.map(_.name).zip(physNames(td)).flatMap { case (l, p) =>
-      Seq(l -> p, nsCol(l) -> nsCol(p))
-    }.toMap
+    val m = physNameMap(td)
     names.map(n => m.getOrElse(n, n))
   }
 
@@ -803,6 +847,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
         logicalToPhys(td, matched).coalesce(1)
           .write.mode("append").parquet(deletesDir(td).toString)
     }
+    published(td.dbName, td.tblName)
   }
 
   /** Tail the table's append log as a stream: every append commit is
@@ -831,11 +876,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
 
   private def compactData(td: TableDef): Unit = {
     val dir = tblPath(td.dbName, td.tblName)
-    val w = Window.partitionBy(keyColsWithNs(td).map(col): _*)
-      .orderBy(col(SeqCol).desc)
-    val folded = maskedData(td)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val folded = newestPerKey(td, maskedData(td))
     val sorted = logicalToPhys(td, folded)
       .repartitionByRange(col(physNames(td).head))
       .sortWithinPartitions(logicalToPhysNames(td, keyColsWithNs(td))
@@ -870,9 +911,8 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     val cols = td.cols.map(c => s"""["${c.name}","${c.tpe.name}"]""")
       .mkString("[", ",", "]")
     val keys = td.keyNames.map(k => s""""$k"""").mkString("[", ",", "]")
-    val json = s"""{"cols":$cols,"keys":$keys}"""
-    Files.write(dir.resolve("schema.json"),
-      json.getBytes(StandardCharsets.UTF_8))
+    replaceFile(dir.resolve("schema.json"),
+      s"""{"incarnation":${td.incarnation},"cols":$cols,"keys":$keys}""")
   }
 
   private def readSchema(dir: Path, db: String, tbl: String): TableDef = {
@@ -889,7 +929,11 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     val cols = colStrs.grouped(2).map { case Seq(n, t) =>
       n -> OtType.fromName(t)
     }.toSeq
+    // a schema.json written before incarnations existed reads as 0
+    val incarnation = "\"incarnation\":(\\d+)".r.findFirstMatchIn(json)
+      .fold(0L)(_.group(1).toLong)
     TableDef.build(db, tbl, cols, strings(keysPart))
+      .copy(incarnation = incarnation)
   }
 }
 
@@ -960,9 +1004,10 @@ object Catalog {
     var error: Throwable = null
   }
 
-  /** A table's commit lock and the appends queued on it. */
+  /** A table's commit lock, the appends queued on it, and its version. */
   private final class CommitLog {
     val lock = new java.util.concurrent.locks.ReentrantLock()
     val queue = new java.util.concurrent.ConcurrentLinkedQueue[Append]()
+    val version = new java.util.concurrent.atomic.AtomicLong
   }
 }

@@ -38,8 +38,6 @@ private object Resolved {
   final case class InsertS(td: TableDef, values: Array[Any],
       nPlaceholders: Int)
   final case class DeleteS(td: TableDef, conds: Seq[Cond], nPlaceholders: Int)
-  /** An INSERT's bound rows, committed outside the engine monitor. */
-  final case class Commit(td: TableDef, rows: Seq[Seq[Any]])
 }
 
 /** The Spark-hosted engine exposing the reference's statement surface
@@ -50,26 +48,31 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
   import Resolved._
 
   val catalog = new Catalog(spark, warehouse)
-  private var currentDb: String = ""
+  /** The db that [[execute]] and [[batchInsert]] resolve against. */
+  @volatile private var currentDb: String = ""
   private val users = TrieMap.empty[String, User]
-  // per-db, per-sec factor cache with invalidation (reference adj.go:34-47)
-  private val adjCache = TrieMap.empty[String, Map[Int, Array[Adj.Factor]]]
+  // per-db `_adj_` factors with the `_adj_` table version they were read
+  // at: a write to `_adj_` bumps the version (reference adj.go:34-47)
+  private val adjCache =
+    TrieMap.empty[String, (Long, Map[Int, Array[Adj.Factor]])]
 
-  /** Execute with a per-call current-db override (the wire server keeps
-    * one db per CONNECTION, reference server.go:232 `usedDbName`, while
-    * the engine's `use` state is global). See [[execute]] for what runs
-    * under the engine monitor.
+  /** Execute against `db` as the current db (the wire server keeps one db
+    * per CONNECTION, reference server.go:232 `usedDbName`); an empty `db`
+    * means the engine's [[use]] db. See [[execute]].
     */
   def executeWithDb(sql: String, args: Seq[Any], user: Option[User],
       db: String): DataFrame =
-    bindThenCommit(db)(bindStatement(sql, args, user, keepNs = false))
+    run(sql, args, user, orCurrent(db), keepNs = false)
 
-  /** [[batchInsert]] under a per-call current-db override (wire server
+  /** [[batchInsert]] against `db` as the current db (wire server
     * connections carry their own used db).
     */
   def batchInsertWithDb(sql: String, argsArray: Seq[Seq[Any]],
       user: Option[User], db: String): Unit =
-    bindThenCommit(db)(bindBatch(sql, argsArray, user))
+    Parser.parse(sql) match {
+      case s: Insert => insert(resolveInsert(s, user, orCurrent(db)), argsArray)
+      case _ => throw OtError("Only insert can be batched")
+    }
 
   /** Wire-facing variant: SELECT results additionally carry the `__ns`
     * companion of every selected timestamp column, so the server can
@@ -78,123 +81,80 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     */
   def executeWireNs(sql: String, args: Seq[Any], user: Option[User],
       db: String): DataFrame =
-    bindThenCommit(db)(bindStatement(sql, args, user, keepNs = true))
+    run(sql, args, user, orCurrent(db), keepNs = true)
 
-  def use(db: String, user: Option[User] = None): Unit = this.synchronized {
+  def use(db: String, user: Option[User] = None): Unit = {
     if (!catalog.hasDatabase(db)) throw OtError(s"Database $db does not exist")
-    if (getPerm(db, "", user) == Perm.No) throw OtError("No permisssion")
+    requirePerm(Perm.Readable, db, "", user)
     currentDb = db
   }
 
-  def currentDatabase: String = this.synchronized { currentDb }
+  def currentDatabase: String = currentDb
 
   // ── entry point ──
 
-  /** Parse, resolve and bind run under the engine monitor, so the
-    * per-call db overrides ([[executeWithDb]]/[[executeWireNs]]) can
-    * never bleed into a concurrent caller's name resolution; so do
-    * DELETE, DDL and table functions (their eager rounds included), and
-    * the `_adj_` factor lookup of an adjusted SELECT. A SELECT's read
-    * and an INSERT's commit run after the monitor is released: the read
-    * through the catalog (a small table is read on this thread with no
-    * Spark job, [[Catalog.readTableLocal]]), the commit through
-    * [[Catalog.appendRows]], where concurrent inserts into one table
-    * share a group commit. The returned DataFrame's execution takes no
-    * lock.
+  /** Parse, resolve against the current db, and run, on the calling
+    * thread and under no engine lock: concurrent statements meet only in
+    * the catalog. DDL serializes there on one lock; an INSERT commits
+    * through [[Catalog.appendRows]], where concurrent inserts into one
+    * table share a group commit, and fails if its table was dropped or
+    * re-created meanwhile; a DELETE takes its table's commit lock. A
+    * SELECT reads through the catalog (a small table is read on this
+    * thread with no Spark job, [[Catalog.readTableLocal]]), and table
+    * functions run their eager rounds here too. The returned DataFrame's
+    * execution takes no lock.
     */
   def execute(sql: String, args: Seq[Any] = Nil,
       user: Option[User] = None): DataFrame =
-    bindThenCommit("")(bindStatement(sql, args, user, keepNs = false))
+    run(sql, args, user, currentDb, keepNs = false)
 
-  /** The one statement path of every entry point: `bind` runs under the
-    * engine monitor with the current db overridden by `db` (when
-    * non-empty); then, without the monitor, a bound SELECT reads and a
-    * bound INSERT commits. Every other statement ran inside `bind`.
-    */
-  private def bindThenCommit(db: String)(
-      bind: => Either[() => DataFrame, Commit]): DataFrame = {
-    val bound = this.synchronized {
-      val prev = currentDb
-      if (db != null && db.nonEmpty) currentDb = db
-      try bind finally currentDb = prev
-    }
-    bound match {
-      case Left(read) => read()
-      case Right(Commit(td, rows)) =>
-        catalog.appendRows(td, rows)
-        // once the rows are visible (until then the cached factors are
-        // current, even those an adjusted SELECT cached between the bind
-        // and the commit; factors are computed and cached under the monitor)
-        if (td.tblName == "_adj_")
-          this.synchronized { adjCache.remove(td.dbName) }
-        emptyDf
-    }
-  }
+  private def orCurrent(db: String): String =
+    if (db != null && db.nonEmpty) db else currentDb
 
-  /** Parse, resolve and bind one statement (under the engine monitor):
-    * an INSERT yields its bound rows and a SELECT its read; every other
-    * statement runs here and yields its DataFrame (empty for DELETE and
-    * DDL).
+  /** The one statement path of every entry point: parse, resolve
+    * unqualified table names against `db`, run.
     */
-  private def bindStatement(sql: String, args: Seq[Any], user: Option[User],
-      keepNs: Boolean): Either[() => DataFrame, Commit] =
+  private def run(sql: String, args: Seq[Any], user: Option[User], db: String,
+      keepNs: Boolean): DataFrame =
     Parser.parse(sql) match {
-      case s: Insert => Right(bindInsert(resolveInsert(s, user), Seq(args)))
-      case s: Select => Left(bindSelect(resolveSelect(s, user), args, keepNs))
-      case s: SelectFn =>
-        val df = executeTableFn(s, args, user)
-        Left(() => df)
-      case s: Delete =>
-        val r = resolveDelete(s, user)
-        if (r.td.tblName == "_adj_") adjCache.remove(r.td.dbName)
-        executeDelete(r, args)
-        ran
-      case CreateDatabase(ine, name) =>
-        if (user.exists(!_.isAdmin)) throw OtError("No permisssion")
+      case s: Select => select(resolveSelect(s, user, db), args, keepNs)
+      case s: SelectFn => executeTableFn(s, args, user, db)
+      case stmt => update(stmt, args, user, db); emptyDf
+    }
+
+  /** Run a statement that returns no rows (any but the SELECTs). */
+  private def update(stmt: Stmt, args: Seq[Any], user: Option[User],
+      db: String): Unit = (stmt: @unchecked) match {
+    case s: Insert => insert(resolveInsert(s, user, db), Seq(args))
+    case s: Delete => executeDelete(resolveDelete(s, user, db), args)
+    case CreateDatabase(ine, name) =>
+      if (user.exists(!_.isAdmin)) throw OtError("No permisssion")
+      catalog.ddl {
         if (!(ine && catalog.hasDatabase(name))) catalog.createDatabase(name)
-        ran
-      case CreateTable(ine, tblName, cols, keys) =>
-        val db = resolveDbName(tblName)
-        if (getPerm(dbOrCurrent(tblName), "", user) != Perm.Writable)
-          throw OtError("No permisssion")
-        if (!(ine && catalog.hasTable(db, tblName.table)))
-          createTableChecked(db, tblName.table, cols, keys)
-        ran
-      case DropDatabase(name) =>
-        if (user.exists(!_.isAdmin)) throw OtError("No permisssion")
-        catalog.dropDatabase(name)
-        adjCache.remove(name)
-        ran
-      case DropTable(tbl) =>
-        val db = resolveDbName(tbl)
-        if (getPerm(db, tbl.table, user) != Perm.Writable)
-          throw OtError("No permisssion")
-        if (tbl.table == "_adj_") adjCache.remove(db)
-        catalog.dropTable(db, tbl.table)
-        ran
-      case RenameTable(tbl, to) =>
-        val td = tableSchema(tbl)
-        if (getPerm(td.dbName, td.tblName, user) != Perm.Writable)
-          throw OtError("No permisssion")
-        catalog.renameTable(td.dbName, td.tblName, to)
-        ran
-      case RenameColumn(tbl, from, to) =>
-        val td = tableSchema(tbl)
-        if (getPerm(td.dbName, td.tblName, user) != Perm.Writable)
-          throw OtError("No permisssion")
-        catalog.renameColumn(td.dbName, td.tblName, from, to)
-        ran
-    }
-
-  /** What [[bindStatement]] yields for a statement it already ran. */
-  private val ran: Either[() => DataFrame, Commit] = Left(() => emptyDf)
-
-  private def bindBatch(sql: String, argsArray: Seq[Seq[Any]],
-      user: Option[User]): Either[() => DataFrame, Commit] =
-    Parser.parse(sql) match {
-      case s: Insert => Right(bindInsert(resolveInsert(s, user), argsArray))
-      case _ => throw OtError("Only insert can be batched")
-    }
+      }
+    case CreateTable(ine, tblName, cols, keys) =>
+      val tdb = resolveDbName(tblName, db)
+      requirePerm(Perm.Writable, tdb, "", user)
+      catalog.ddl {
+        if (!(ine && catalog.hasTable(tdb, tblName.table)))
+          createTableChecked(tdb, tblName.table, cols, keys)
+      }
+    case DropDatabase(name) =>
+      if (user.exists(!_.isAdmin)) throw OtError("No permisssion")
+      catalog.dropDatabase(name)
+    case DropTable(tbl) =>
+      val tdb = resolveDbName(tbl, db)
+      requirePerm(Perm.Writable, tdb, tbl.table, user)
+      catalog.dropTable(tdb, tbl.table)
+    case RenameTable(tbl, to) =>
+      val td = tableSchema(tbl, db)
+      requirePerm(Perm.Writable, td.dbName, td.tblName, user)
+      catalog.renameTable(td.dbName, td.tblName, to)
+    case RenameColumn(tbl, from, to) =>
+      val td = tableSchema(tbl, db)
+      requirePerm(Perm.Writable, td.dbName, td.tblName, user)
+      catalog.renameColumn(td.dbName, td.tblName, from, to)
+  }
 
   /** Register every table of `db` as a temp view named `<db>_<table>`
     * and return the view names — full Spark SQL (joins, aggregations,
@@ -291,8 +251,8 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
       }
       f.name -> t
     }
-    createTableChecked(db, tbl, cols.map { case (n, t) => n -> t.name }, keys)
-    val td = catalog.getSchema(db, tbl)
+    val td = createTableChecked(db, tbl,
+      cols.map { case (n, t) => n -> t.name }, keys)
     val aligned = df.select(td.cols.map(c =>
       col(c.name).cast(c.tpe.spark).as(c.name)): _*)
     catalog.importData(td, aligned)
@@ -302,7 +262,7 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
   /** Bulk ingest: many rows, one append batch (reference query.go:294-307). */
   def batchInsert(sql: String, argsArray: Seq[Seq[Any]],
       user: Option[User] = None): Unit =
-    bindThenCommit("")(bindBatch(sql, argsArray, user))
+    batchInsertWithDb(sql, argsArray, user, currentDb)
 
   private def emptyDf: DataFrame = spark.emptyDataFrame
 
@@ -362,26 +322,28 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
         }
     }
 
+  /** Fail unless `user` holds at least `need` on `db` (or `db.tbl`). */
+  private def requirePerm(need: Perm.Value, db: String, tbl: String,
+      user: Option[User]): Unit =
+    if (getPerm(db, tbl, user) < need) throw OtError("No permisssion")
+
   // ── name resolution (reference query.go:793-804) ──
 
-  private def dbOrCurrent(t: TableName): String =
-    if (currentDb == "" || t.db.nonEmpty) t.dbName else currentDb
-
-  private def resolveDbName(t: TableName): String = {
-    val db = dbOrCurrent(t)
+  private def resolveDbName(t: TableName, current: String): String = {
+    val db = t.db.getOrElse(current)
     if (db == "")
       throw OtError("No database name has been specified. USE a database " +
         "name, or explicitly specify databasename.tablename")
     db
   }
 
-  private def tableSchema(t: TableName): TableDef =
-    catalog.getSchema(resolveDbName(t), t.table)
+  private def tableSchema(t: TableName, current: String): TableDef =
+    catalog.getSchema(resolveDbName(t, current), t.table)
 
   // ── DDL validation (reference schema.go:264-346) ──
 
   private def createTableChecked(db: String, tbl: String,
-      cols: Seq[(String, String)], keys: Seq[String]): Unit = {
+      cols: Seq[(String, String)], keys: Seq[String]): TableDef = {
     if (!catalog.hasDatabase(db)) throw OtError(s"Database $db does not exist")
     if (catalog.hasTable(db, tbl))
       throw OtError(s"Table $db.$tbl already exists")
@@ -472,10 +434,10 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
 
   // ── SELECT resolution (reference query.go:345-417, 834-877) ──
 
-  private def resolveSelect(s: Select, user: Option[User]): SelectS = {
-    val td = tableSchema(s.table)
-    if (getPerm(td.dbName, td.tblName, user) == Perm.No)
-      throw OtError("No permisssion")
+  private def resolveSelect(s: Select, user: Option[User],
+      db: String): SelectS = {
+    val td = tableSchema(s.table, db)
+    requirePerm(Perm.Readable, td.dbName, td.tblName, user)
     val (conds, nPh) = resolveWhere(td, s.where)
     var limit = 0
     var reverse = false
@@ -537,10 +499,10 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     SelectS(td, conds, cols, nPh, limit, reverse, adjs)
   }
 
-  private def resolveInsert(s: Insert, user: Option[User]): InsertS = {
-    val td = tableSchema(s.table)
-    if (getPerm(td.dbName, td.tblName, user) != Perm.Writable)
-      throw OtError("No permisssion")
+  private def resolveInsert(s: Insert, user: Option[User],
+      db: String): InsertS = {
+    val td = tableSchema(s.table, db)
+    requirePerm(Perm.Writable, td.dbName, td.tblName, user)
     val colNames = if (s.cols.isEmpty) td.cols.map(_.name) else s.cols
     if (colNames.length != s.values.length)
       throw OtError("Unmatched column names/values")
@@ -564,10 +526,10 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     InsertS(td, values, nPh)
   }
 
-  private def resolveDelete(s: Delete, user: Option[User]): DeleteS = {
-    val td = tableSchema(s.table)
-    if (getPerm(td.dbName, td.tblName, user) != Perm.Writable)
-      throw OtError("No permisssion")
+  private def resolveDelete(s: Delete, user: Option[User],
+      db: String): DeleteS = {
+    val td = tableSchema(s.table, db)
+    requirePerm(Perm.Writable, td.dbName, td.tblName, user)
     val (conds, nPh) = resolveWhere(td, s.where)
     DeleteS(td, conds, nPh)
   }
@@ -678,36 +640,21 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     preds.reduceOption(_ && _)
   }
 
-  /** Bind a SELECT's placeholders and look up the `_adj_` factors an
-    * adjusted SELECT applies (under the engine monitor, where a committed
-    * `_adj_` insert invalidates them); the returned read runs outside it.
-    */
-  private def bindSelect(s: SelectS, args: Seq[Any],
-      keepNs: Boolean): () => DataFrame = {
+  private def select(s: SelectS, args: Seq[Any],
+      keepNs: Boolean): DataFrame = {
     checkArity(s.nPlaceholders, args)
     val conds = bindConds(s.td, s.conds, args)
-    val factors = if (s.adjs.isEmpty) Map.empty[Int, Array[Adj.Factor]]
-      else adjFactors(s.td.dbName)
-    () => readSelect(s, conds, factors, keepNs)
-  }
-
-  private def readSelect(s: SelectS, conds: Seq[Cond],
-      factors: Map[Int, Array[Adj.Factor]], keepNs: Boolean): DataFrame = {
-    // presentation order = PK order, reversed by negative limit
-    // (reference query.go:158, 359-365). A small table is read, filtered,
-    // sorted and deduped on this thread (Catalog.readTableLocal). On a
-    // CLEAN table the compacted layout already delivers that order
-    // file-by-file with no sort or Exchange in the plan
-    // (Catalog.readTableOrdered); only dirty tables (or clean reads the
-    // ordered path declines) pay an explicit sort.
     val pushed = condsToSourceFilters(s.td, conds)
     val pred = condsToPredicate(s.td, conds)
-    // ns remainder columns ride along for predicates/sort; the final
-    // projection (logical columns only) drops them. Dirty tables take
-    // the fused single-shuffle LWW+order read (round-11: the previous
-    // window-then-global-sort fallback paid two exchanges — see
-    // Catalog.readTableOrderedDirty); the PK predicate moves inside it
-    // so parquet pushdown still prunes before the exchange.
+    // presentation order = PK order, reversed by negative limit
+    // (reference query.go:158, 359-365): a small table is read, filtered,
+    // sorted and deduped on this thread (Catalog.readTableLocal); a CLEAN
+    // table's compacted layout delivers that order file by file with no
+    // sort or Exchange (Catalog.readTableOrdered); the rest take the
+    // one-shuffle LWW+order read with the PK predicate inside it, so
+    // parquet pushdown still prunes before the exchange
+    // (Catalog.readTableOrderedDirty). ns remainder columns ride along for
+    // predicates and sort; the final projection drops them.
     var df = catalog.readTableLocal(s.td, s.reverse, pushed, pred)
       .orElse(catalog.readTableOrdered(s.td, s.reverse, pushed)
         .map(d => pred.map(d.filter).getOrElse(d)))
@@ -717,7 +664,7 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     val proj: Seq[Column] =
       if (s.adjs.isEmpty) s.cols.map(c => col(c.name))
       else {
-        val bc = spark.sparkContext.broadcast(factors)
+        val bc = spark.sparkContext.broadcast(adjFactors(s.td.dbName))
         val secCol = col(s.td.keys.head.name)
         val tmCol = col(s.td.keys.last.name)
         val byPos = s.adjs.map(a => a.posInSelect -> a).toMap
@@ -752,7 +699,7 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     * reverse here and is rejected.
     */
   private def executeTableFn(s: SelectFn, args: Seq[Any],
-      user: Option[User]): DataFrame = {
+      user: Option[User], db: String): DataFrame = {
     val fd = TableFns.registry.getOrElse(s.fn,
       throw OtError(s"Unknown table function ${s.fn}"))
     checkArity(s.args.count(_ == Placeholder) +
@@ -774,9 +721,8 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
         throw OtError(s"${s.fn}: first argument must be a table " +
           s"reference string, got $other")
     }
-    val td = tableSchema(tn)
-    if (getPerm(td.dbName, td.tblName, user) == Perm.No)
-      throw OtError("No permisssion")
+    val td = tableSchema(tn, db)
+    requirePerm(Perm.Readable, td.dbName, td.tblName, user)
     var out = fd.apply(catalog.readTable(td), bound)
     val outCols = out.columns.toSet
     // WHERE over the output schema: conjunction of the dialect's five
@@ -827,18 +773,25 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     case _ => true
   }
 
-  private def adjFactors(dbName: String): Map[Int, Array[Adj.Factor]] =
-    adjCache.getOrElseUpdate(dbName, {
-      if (catalog.hasTable(dbName, "_adj_")) {
-        val td = catalog.getSchema(dbName, "_adj_")
-        Adj.factors(catalog.readTable(td))
-      } else Map.empty
-    })
-
-  /** Bind an INSERT's placeholders for every argument row (under the
-    * engine monitor); the rows commit later, outside it.
+  /** The db's `_adj_` factors, cached under the `_adj_` version read
+    * before computing them: a write that lands meanwhile leaves the entry
+    * behind the version, so the next lookup recomputes.
     */
-  private def bindInsert(s: InsertS, argsArray: Seq[Seq[Any]]): Commit = {
+  private def adjFactors(db: String): Map[Int, Array[Adj.Factor]] = {
+    val version = catalog.version(db, "_adj_")
+    adjCache.get(db).collect { case (`version`, f) => f }.getOrElse {
+      val f =
+        if (!catalog.hasTable(db, "_adj_")) Map.empty[Int, Array[Adj.Factor]]
+        else Adj.factors(catalog.readTable(catalog.getSchema(db, "_adj_")))
+      adjCache.put(db, (version, f))
+      f
+    }
+  }
+
+  /** Bind an INSERT's placeholders for every argument row and commit the
+    * rows as one append.
+    */
+  private def insert(s: InsertS, argsArray: Seq[Seq[Any]]): Unit = {
     val rows = argsArray.map { args =>
       checkArity(s.nPlaceholders, args)
       s.td.cols.indices.map { i =>
@@ -849,7 +802,7 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
         }
       }
     }
-    Commit(s.td, rows)
+    catalog.appendRows(s.td, rows)
   }
 
   private def executeDelete(s: DeleteS, args: Seq[Any]): Unit = {

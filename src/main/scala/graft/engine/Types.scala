@@ -152,9 +152,13 @@ object Coerce {
 final case class ColDef(name: String, tpe: OtType, isKey: Boolean = false,
     posCol: Int = 0, pos: Int = 0)
 
-/** A table schema with PK metadata (reference schema.go:166-203). */
+/** A table schema with PK metadata (reference schema.go:166-203).
+  * `incarnation` names one CREATE TABLE: renames keep it, and a table
+  * re-created under a dropped name gets a new one (0 for a table whose
+  * `schema.json` predates incarnations).
+  */
 final case class TableDef(dbName: String, tblName: String, cols: Seq[ColDef],
-    keyNames: Seq[String]) {
+    keyNames: Seq[String], incarnation: Long = 0L) {
   val nameMap: Map[String, ColDef] = cols.map(c => c.name -> c).toMap
   val keys: Seq[ColDef] = keyNames.map(nameMap)
   val values: Seq[ColDef] = cols.filterNot(c => keyNames.contains(c.name))

@@ -427,39 +427,55 @@ class StorageSpec extends AnyFunSuite {
     assert(!Files.exists(java.nio.file.Paths.get(engine.warehouse, "s", "racing")))
   }
 
-  test("inserts bound before DROP fail alone when the table is re-created in another shape") {
-    engine.execute("create table s.reborn(k int, v double, primary key(k))")
-    val td = engine.catalog.getSchema("s", "reborn")
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    def insert(sql: String): Thread = {
-      val th = new Thread(() =>
-        try engine.execute(sql) catch { case e: Throwable => failures.add(e) })
-      th.start()
-      th
+  test("inserts bound before DROP fail alone when the table is re-created, in the same shape or another") {
+    // (re-created table, its fresh insert, what a SELECT then returns)
+    for ((tbl, recreate, fresh, rows) <- Seq(
+        ("reborn", "(k text, n int, w bigint, primary key(k))",
+          "('a', 1, 2)", Seq(Row("a", 1, 2L))),
+        ("reborn_same", "(k int, v double, primary key(k))",
+          "(7, 2.0)", Seq(Row(7, 2.0))))) {
+      engine.execute(s"create table s.$tbl(k int, v double, primary key(k))")
+      val td = engine.catalog.getSchema("s", tbl)
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      def insert(sql: String): Thread = {
+        val th = new Thread(() =>
+          try engine.execute(sql) catch { case e: Throwable => failures.add(e) })
+        th.start()
+        th
+      }
+      def awaitQueued(n: Int, threads: Seq[Thread]): Unit = {
+        while (engine.catalog.queuedAppends(td) < n && threads.forall(_.isAlive))
+          Thread.onSpinWait()
+        assert(engine.catalog.queuedAppends(td) == n)
+      }
+      // two inserts bound to the old table queue ahead of one bound to the
+      // re-created table; all three commit once the lock is released
+      engine.catalog.withCommitLock("s", tbl) {
+        val stale = (0 until 2).map(t => insert(s"insert into s.$tbl values($t, 1.0)"))
+        awaitQueued(2, stale)
+        engine.execute(s"drop table s.$tbl")
+        engine.execute(s"create table s.$tbl$recreate")
+        val last = insert(s"insert into s.$tbl values$fresh")
+        awaitQueued(3, stale :+ last)
+        stale :+ last
+      }.foreach(_.join())
+      assert(failures.size == 2, (tbl, failures))
+      failures.asScala.foreach { e =>
+        assert(e.isInstanceOf[OtError] &&
+          e.getMessage.contains(s"s.$tbl does not exists"), e)
+      }
+      assert(engine.execute(s"select * from s.$tbl").collect().toSeq == rows)
     }
-    def awaitQueued(n: Int, threads: Seq[Thread]): Unit = {
-      while (engine.catalog.queuedAppends(td) < n && threads.forall(_.isAlive))
-        Thread.onSpinWait()
-      assert(engine.catalog.queuedAppends(td) == n)
-    }
-    // two inserts bound to the old table queue ahead of one bound to the
-    // re-created table; all three commit once the lock is released
-    engine.catalog.withCommitLock("s", "reborn") {
-      val stale = (0 until 2).map(t => insert(s"insert into s.reborn values($t, 1.0)"))
-      awaitQueued(2, stale)
-      engine.execute("drop table s.reborn")
-      engine.execute("create table s.reborn(k text, n int, w bigint, primary key(k))")
-      val fresh = insert("insert into s.reborn values('a', 1, 2)")
-      awaitQueued(3, stale :+ fresh)
-      stale :+ fresh
-    }.foreach(_.join())
-    assert(failures.size == 2, failures)
-    failures.asScala.foreach { e =>
-      assert(e.isInstanceOf[OtError] &&
-        e.getMessage.contains("s.reborn does not exists"), e)
-    }
-    assert(engine.execute("select * from s.reborn").collect().toSeq ==
-      Seq(Row("a", 1, 2L)))
+  }
+
+  test("a schema.json written before incarnations reads as incarnation 0 and takes commits") {
+    engine.execute("create table s.legacy(k int, v double, primary key(k))")
+    Files.write(java.nio.file.Paths.get(engine.warehouse, "s", "legacy", "schema.json"),
+      """{"cols":[["k","INT"],["v","DOUBLE"]],"keys":["k"]}""".getBytes("UTF-8"))
+    val reopened = new Engine(spark, engine.warehouse)
+    assert(reopened.catalog.getSchema("s", "legacy").incarnation == 0)
+    reopened.execute("insert into s.legacy values(1, 1.5)")
+    assert(reopened.execute("select * from s.legacy").collect().toSeq == Seq(Row(1, 1.5)))
   }
 
   test("a clean-table read beside a commit returns one row per key") {
@@ -509,6 +525,18 @@ class StorageSpec extends AnyFunSuite {
       assert(adjusted == Seq(1.0, 1.0))
     }
     insert.join() // the insert is acked
+    assert(adjusted == Seq(0.5, 1.0))
+  }
+
+  test("an adjusted SELECT after an _adj_ append made around the engine sees the new factor") {
+    engine.execute("create database sb")
+    engine.execute("create table sb.bar(a int, b timestamp, c double, primary key(a, b))")
+    for (b <- Seq(0, 4)) engine.execute(s"insert into sb.bar values(1, $b, 1.0)")
+    def adjusted = engine.execute("select b, adj(c) from sb.bar where a=1")
+      .collect().map(_.getDouble(1)).toSeq
+    assert(adjusted == Seq(1.0, 1.0)) // caches the factors
+    engine.catalog.appendRows(engine.catalog.getSchema("sb", "_adj_"),
+      Seq(Seq[Any](1, java.time.Instant.ofEpochSecond(3), 0.5, 2.0)))
     assert(adjusted == Seq(0.5, 1.0))
   }
 }
