@@ -427,45 +427,53 @@ class StorageSpec extends AnyFunSuite {
     assert(!Files.exists(java.nio.file.Paths.get(engine.warehouse, "s", "racing")))
   }
 
-  test("inserts bound before DROP fail alone when the table is re-created, in the same shape or another") {
-    // (re-created table, its fresh insert, what a SELECT then returns)
-    for ((tbl, recreate, fresh, rows) <- Seq(
-        ("reborn", "(k text, n int, w bigint, primary key(k))",
-          "('a', 1, 2)", Seq(Row("a", 1, 2L))),
-        ("reborn_same", "(k int, v double, primary key(k))",
-          "(7, 2.0)", Seq(Row(7, 2.0))))) {
-      engine.execute(s"create table s.$tbl(k int, v double, primary key(k))")
-      val td = engine.catalog.getSchema("s", tbl)
-      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      def insert(sql: String): Thread = {
-        val th = new Thread(() =>
-          try engine.execute(sql) catch { case e: Throwable => failures.add(e) })
-        th.start()
-        th
-      }
-      def awaitQueued(n: Int, threads: Seq[Thread]): Unit = {
-        while (engine.catalog.queuedAppends(td) < n && threads.forall(_.isAlive))
-          Thread.onSpinWait()
-        assert(engine.catalog.queuedAppends(td) == n)
-      }
-      // two inserts bound to the old table queue ahead of one bound to the
-      // re-created table; all three commit once the lock is released
-      engine.catalog.withCommitLock("s", tbl) {
-        val stale = (0 until 2).map(t => insert(s"insert into s.$tbl values($t, 1.0)"))
-        awaitQueued(2, stale)
-        engine.execute(s"drop table s.$tbl")
-        engine.execute(s"create table s.$tbl$recreate")
-        val last = insert(s"insert into s.$tbl values$fresh")
-        awaitQueued(3, stale :+ last)
-        stale :+ last
-      }.foreach(_.join())
-      assert(failures.size == 2, (tbl, failures))
-      failures.asScala.foreach { e =>
-        assert(e.isInstanceOf[OtError] &&
-          e.getMessage.contains(s"s.$tbl does not exists"), e)
-      }
-      assert(engine.execute(s"select * from s.$tbl").collect().toSeq == rows)
+  /** Two inserts bound to `s.tbl` queue behind its commit lock, the table
+    * is dropped and re-created as `recreate`, and an insert of `fresh`
+    * queues behind them: the two stale inserts fail, the fresh one commits
+    * and a SELECT returns `rows`. */
+  private def staleInsertsAcrossRecreate(tbl: String, recreate: String,
+      fresh: String, rows: Seq[Row]): Unit = {
+    engine.execute(s"create table s.$tbl(k int, v double, primary key(k))")
+    val td = engine.catalog.getSchema("s", tbl)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def insert(sql: String): Thread = {
+      val th = new Thread(() =>
+        try engine.execute(sql) catch { case e: Throwable => failures.add(e) })
+      th.start()
+      th
     }
+    def awaitQueued(n: Int, threads: Seq[Thread]): Unit = {
+      while (engine.catalog.queuedAppends(td) < n && threads.forall(_.isAlive))
+        Thread.onSpinWait()
+      assert(engine.catalog.queuedAppends(td) == n)
+    }
+    // two inserts bound to the old table queue ahead of one bound to the
+    // re-created table; all three commit once the lock is released
+    engine.catalog.withCommitLock("s", tbl) {
+      val stale = (0 until 2).map(t => insert(s"insert into s.$tbl values($t, 1.0)"))
+      awaitQueued(2, stale)
+      engine.execute(s"drop table s.$tbl")
+      engine.execute(s"create table s.$tbl$recreate")
+      val last = insert(s"insert into s.$tbl values$fresh")
+      awaitQueued(3, stale :+ last)
+      stale :+ last
+    }.foreach(_.join())
+    assert(failures.size == 2, failures)
+    failures.asScala.foreach { e =>
+      assert(e.isInstanceOf[OtError] &&
+        e.getMessage.contains(s"s.$tbl does not exists"), e)
+    }
+    assert(engine.execute(s"select * from s.$tbl").collect().toSeq == rows)
+  }
+
+  test("inserts bound before DROP fail alone when the table is re-created in another shape") {
+    staleInsertsAcrossRecreate("reborn", "(k text, n int, w bigint, primary key(k))",
+      "('a', 1, 2)", Seq(Row("a", 1, 2L)))
+  }
+
+  test("inserts bound before DROP fail alone when the table is re-created in the same shape") {
+    staleInsertsAcrossRecreate("reborn_same", "(k int, v double, primary key(k))",
+      "(7, 2.0)", Seq(Row(7, 2.0)))
   }
 
   test("a schema.json written before incarnations reads as incarnation 0 and takes commits") {
