@@ -5,8 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths,
-  StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -53,7 +52,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * and rename and every [[getSchema]] miss takes; reads, appends and
     * DELETE never do.
     */
-  private[engine] def ddl[A](body: => A): A = ddlLock.synchronized(body)
+  private def ddl[A](body: => A): A = ddlLock.synchronized(body)
 
   // ── nanosecond fidelity ──────────────────────────────────────────
   // Spark TimestampType is µs; the reference keys rows by (sec, nsec)
@@ -94,19 +93,25 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
 
   def hasDatabase(db: String): Boolean = Files.isDirectory(dbPath(db))
 
-  def createDatabase(db: String): Unit = ddl {
-    Files.createDirectories(Paths.get(warehouse))
-    claim(dbPath(db), s"Database $db already exists")
-    // every database gets its _adj_ table (reference schema.go:65,247-262)
-    createTable(TableDef.build(db, "_adj_",
-      Seq("sec" -> OtType.Int, "time" -> OtType.Timestamp,
-        "px" -> OtType.Double, "vol" -> OtType.Double),
-      Seq("sec", "time")))
+  /** Create `db` with its `_adj_` table; when the name is taken, do
+    * nothing if `ifNotExists`, else fail.
+    */
+  def createDatabase(db: String, ifNotExists: Boolean = false): Unit = ddl {
+    if (hasDatabase(db)) {
+      if (!ifNotExists) throw OtError(s"Database $db already exists")
+    } else {
+      Files.createDirectories(Paths.get(warehouse))
+      Files.createDirectory(dbPath(db))
+      // every database gets its _adj_ table (reference schema.go:65,247-262)
+      createTable(db, "_adj_")(TableDef.build(db, "_adj_",
+        Seq("sec" -> OtType.Int, "time" -> OtType.Timestamp,
+          "px" -> OtType.Double, "vol" -> OtType.Double),
+        Seq("sec", "time")))
+    }
   }
 
   def dropDatabase(db: String): Unit = ddl {
-    if (!hasDatabase(db)) throw OtError(s"Database $db does not exist")
-    listTables(db).foreach(t => dropTable(db, t))
+    listTables(db).foreach(t => dropTable(db, t)) // fails for a missing db
     deleteRecursively(dbPath(db))
   }
 
@@ -131,11 +136,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     else withStream(Files.list(p))(_.filter(Files.isDirectory(_))
       .map(_.getFileName.toString).toSeq.sorted)
 
-  /** Create `dir`, failing with `exists` if anything holds the name. */
-  private def claim(dir: Path, exists: String): Unit =
-    try Files.createDirectory(dir)
-    catch { case _: FileAlreadyExistsException => throw OtError(exists) }
-
   private def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {
       withStream(Files.walk(p))(_.toSeq).reverse.foreach(Files.delete)
@@ -147,20 +147,28 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
   def hasTable(db: String, tbl: String): Boolean =
     Files.isDirectory(tblPath(db, tbl))
 
-  /** Create the table under a new incarnation and return its TableDef. */
-  def createTable(td: TableDef): TableDef = ddl {
-    if (!hasDatabase(td.dbName))
-      throw OtError(s"Database ${td.dbName} does not exist")
-    val dir = tblPath(td.dbName, td.tblName)
-    claim(dir, s"Table ${td.dbName}.${td.tblName} already exists")
-    // physical parquet names are fixed forever at creation; renames only
-    // touch schema.json, whose presence marks the table complete
-    writePhysNames(dir, td.cols.map(_.name))
-    val created = td.copy(incarnation =
-      java.util.concurrent.ThreadLocalRandom.current.nextLong(1, Long.MaxValue))
-    writeSchema(dir, created)
-    schemaCache.put(s"${td.dbName}.${td.tblName}", created)
-    created
+  /** Create table `db.tbl` as `define`s under a new incarnation and return
+    * it; if the name is taken, return that table when `ifNotExists`, else
+    * fail. `define` may reject the definition; it runs for a free name only.
+    */
+  def createTable(db: String, tbl: String, ifNotExists: Boolean = false)(
+      define: => TableDef): TableDef = ddl {
+    if (!hasDatabase(db)) throw OtError(s"Database $db does not exist")
+    if (hasTable(db, tbl)) {
+      if (ifNotExists) getSchema(db, tbl)
+      else throw OtError(s"Table $db.$tbl already exists")
+    } else {
+      val td = define
+      val dir = Files.createDirectory(tblPath(db, tbl))
+      // physical parquet names are fixed forever at creation; renames only
+      // touch schema.json, whose presence marks the table complete
+      writePhysNames(dir, td.cols.map(_.name))
+      val created = td.copy(incarnation =
+        java.util.concurrent.ThreadLocalRandom.current.nextLong(1, Long.MaxValue))
+      writeSchema(dir, created)
+      schemaCache.put(s"$db.$tbl", created)
+      created
+    }
   }
 
   def dropTable(db: String, tbl: String): Unit = ddl(withCommitLock(db, tbl) {
@@ -168,7 +176,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     if (!hasTable(db, tbl)) throw OtError(s"Table $db.$tbl does not exists")
     schemaCache.remove(s"$db.$tbl")
     deleteRecursively(tblPath(db, tbl))
-    published(db, tbl)
   })
 
   def getSchema(db: String, tbl: String): TableDef = {
@@ -186,8 +193,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       StandardCopyOption.ATOMIC_MOVE)
     schemaCache.remove(s"$db.$tbl")
     schemaCache.put(s"$db.$to", td.copy(tblName = to))
-    published(db, tbl)
-    published(db, to)
+    commitLog(db, to).version.incrementAndGet()
   })
 
   def renameColumn(db: String, tbl: String, from: String,
@@ -205,7 +211,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       keyNames = td.keyNames.map(k => if (k == from) to else k))
     writeSchema(tblPath(db, tbl), nd)
     schemaCache.put(s"$db.$tbl", nd)
-    published(db, tbl)
     // data untouched: files keep the physical names recorded in phys.json
     // (fixed at CREATE TABLE), and both reads and future writes go through
     // that mapping — so files written before and after the rename agree
@@ -676,21 +681,31 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
   private[engine] def version(db: String, tbl: String): Long =
     commitLog(db, tbl).version.get
 
-  private def published(db: String, tbl: String): Unit =
-    commitLog(db, tbl).version.incrementAndGet()
-
   /** Run `body` holding the table's commit lock: no append commits, and
     * no other holder drops, renames, deletes from or rewrites the table
-    * meanwhile. Lock order: the DDL lock (when taken) before a commit
-    * lock, and one table's commit lock at a time. So a commit-lock holder
-    * never waits on the DDL lock: a commit checks its table by
+    * meanwhile. Every change to a table's rows or schema runs in here, so
+    * the table's [[version]] is bumped as `body` ends, before the lock is
+    * released (a needless bump only costs a recompute). Lock order: the DDL lock (when taken) before a
+    * commit lock, and one table's commit lock at a time. So a commit-lock
+    * holder never waits on the DDL lock: a commit checks its table by
     * [[tableNow]], not [[getSchema]].
     */
   private[engine] def withCommitLock[A](db: String, tbl: String)(body: => A): A = {
-    val lock = commitLog(db, tbl).lock
-    lock.lock()
-    try body finally lock.unlock()
+    val log = commitLog(db, tbl)
+    log.lock.lock()
+    try body finally { log.version.incrementAndGet(); log.lock.unlock() }
   }
+
+  /** [[withCommitLock]] on `td`'s table, failing as a missing table unless
+    * it still has `td`'s incarnation: a write resolved before a DROP or
+    * RENAME must neither re-create a directory nor land in a new table.
+    */
+  private def withTableLock[A](td: TableDef)(body: => A): A =
+    withCommitLock(td.dbName, td.tblName) {
+      if (!tableNow(td).exists(_.incarnation == td.incarnation))
+        throw OtError(s"Table ${td.dbName}.${td.tblName} does not exists")
+      body
+    }
 
   /** Appends queued on the table's commit lock (for specs that park it). */
   private[engine] def queuedAppends(td: TableDef): Int =
@@ -719,10 +734,11 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
       nBytes += next.estBytes
       next = log.queue.peek()
     }
+    // re-entered: the version is bumped before any member sees `done`
     val error =
       try {
-        writeBatch(head.td, members.iterator.flatMap(_.rows))
-        published(head.td.dbName, head.td.tblName)
+        withTableLock(head.td)(
+          writeBatch(head.td, members.iterator.flatMap(_.rows)))
         null
       } catch { case e: Throwable => e }
     members.foreach { m => m.error = error; m.done = true }
@@ -741,11 +757,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
 
   /** One commit: a new seq and one part file holding `rows`. */
   private def writeBatch(td: TableDef, rows: Iterator[Seq[Any]]): Unit = {
-    // the table may have been dropped or renamed (and its name reused)
-    // since the caller resolved it: fail rather than re-create a stray
-    // directory or write into another table
-    if (!tableNow(td).exists(_.incarnation == td.incarnation))
-      throw OtError(s"Table ${td.dbName}.${td.tblName} does not exists")
     val seq = nextSeq(td)
     val schema = physSchema(td).add(SeqCol, LongType, nullable = false)
     // tight loop: this is the 100k-rows/batch ingest hot path
@@ -795,8 +806,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * min/max stats give range pruning on PK scans. Column order/types
     * must already match the TableDef.
     */
-  def importData(td: TableDef, df: DataFrame): Unit =
-      withCommitLock(td.dbName, td.tblName) {
+  def importData(td: TableDef, df: DataFrame): Unit = withTableLock(td) {
     val wasEmpty = !hasData(td)
     val seq = nextSeq(td)
     // bulk imports arrive through Spark TimestampType (µs): remainders 0
@@ -812,7 +822,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     // a bulk import into an empty table IS its compacted form: reads can
     // skip the LWW window until the next append lands
     if (wasEmpty) markClean(td)
-    published(td.dbName, td.tblName)
   }
 
   /** Map logical column names (possibly incl. ns remainders) to their
@@ -831,7 +840,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * DELETE (no predicate) is a metadata drop of the data dir.
     */
   def deleteWhere(td: TableDef, pred: Option[org.apache.spark.sql.Column]): Unit =
-      withCommitLock(td.dbName, td.tblName) {
+      withTableLock(td) {
     val dir = tblPath(td.dbName, td.tblName)
     if (hasData(td)) pred match {
       case None =>
@@ -847,7 +856,6 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
         logicalToPhys(td, matched).coalesce(1)
           .write.mode("append").parquet(deletesDir(td).toString)
     }
-    published(td.dbName, td.tblName)
   }
 
   /** Tail the table's append log as a stream: every append commit is
@@ -870,7 +878,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     * correctness). Holds the table's commit lock throughout, so no
     * commit lands between the read of `data/` and its replacement.
     */
-  def compact(td: TableDef): Unit = withCommitLock(td.dbName, td.tblName) {
+  def compact(td: TableDef): Unit = withTableLock(td) {
     if (hasData(td)) compactData(td)
   }
 

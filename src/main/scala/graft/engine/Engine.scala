@@ -129,16 +129,11 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     case s: Delete => executeDelete(resolveDelete(s, user, db), args)
     case CreateDatabase(ine, name) =>
       if (user.exists(!_.isAdmin)) throw OtError("No permisssion")
-      catalog.ddl {
-        if (!(ine && catalog.hasDatabase(name))) catalog.createDatabase(name)
-      }
+      catalog.createDatabase(name, ine)
     case CreateTable(ine, tblName, cols, keys) =>
       val tdb = resolveDbName(tblName, db)
       requirePerm(Perm.Writable, tdb, "", user)
-      catalog.ddl {
-        if (!(ine && catalog.hasTable(tdb, tblName.table)))
-          createTableChecked(tdb, tblName.table, cols, keys)
-      }
+      createTableChecked(tdb, tblName.table, cols, keys, ine)
     case DropDatabase(name) =>
       if (user.exists(!_.isAdmin)) throw OtError("No permisssion")
       catalog.dropDatabase(name)
@@ -273,11 +268,10 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
   def tableSchemaOf(db: String, tbl: String): TableDef = catalog.getSchema(db, tbl)
 
   def loadUsers(): Unit = {
-    if (!catalog.hasDatabase("_meta_")) catalog.createDatabase("_meta_")
-    if (!catalog.hasTable("_meta_", "user"))
-      createTableChecked("_meta_", "user",
-        Seq("name" -> "TEXT", "password" -> "TEXT", "is_admin" -> "BOOLEAN",
-          "perm" -> "TEXT"), Seq("name"))
+    catalog.createDatabase("_meta_", ifNotExists = true)
+    createTableChecked("_meta_", "user",
+      Seq("name" -> "TEXT", "password" -> "TEXT", "is_admin" -> "BOOLEAN",
+        "perm" -> "TEXT"), Seq("name"), ifNotExists = true)
     users.clear()
     val td = catalog.getSchema("_meta_", "user")
     catalog.readTable(td).collect().foreach { r =>
@@ -343,10 +337,9 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
   // ── DDL validation (reference schema.go:264-346) ──
 
   private def createTableChecked(db: String, tbl: String,
-      cols: Seq[(String, String)], keys: Seq[String]): TableDef = {
-    if (!catalog.hasDatabase(db)) throw OtError(s"Database $db does not exist")
-    if (catalog.hasTable(db, tbl))
-      throw OtError(s"Table $db.$tbl already exists")
+      cols: Seq[(String, String)], keys: Seq[String],
+      ifNotExists: Boolean = false): TableDef =
+      catalog.createTable(db, tbl, ifNotExists) {
     val seen = ArrayBuffer.empty[String]
     for ((n, _) <- cols) {
       if (seen.contains(n))
@@ -366,8 +359,8 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
       seenKeys += k
     }
     if (keys.isEmpty) throw OtError("PRIMARY KEY not declared")
-    catalog.createTable(TableDef.build(db, tbl,
-      cols.map { case (n, t) => n -> OtType.parse(t) }, keys))
+    TableDef.build(db, tbl, cols.map { case (n, t) => n -> OtType.parse(t) },
+      keys)
   }
 
   // ── WHERE resolution (reference query.go:579-669, exact semantics) ──

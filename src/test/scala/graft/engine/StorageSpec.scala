@@ -427,38 +427,41 @@ class StorageSpec extends AnyFunSuite {
     assert(!Files.exists(java.nio.file.Paths.get(engine.warehouse, "s", "racing")))
   }
 
-  /** Two inserts bound to `s.tbl` queue behind its commit lock, the table
-    * is dropped and re-created as `recreate`, and an insert of `fresh`
-    * queues behind them: the two stale inserts fail, the fresh one commits
-    * and a SELECT returns `rows`. */
+  /** Two inserts and a full DELETE bound to `s.tbl` wait on its commit
+    * lock while the table is dropped and re-created as `recreate`, and an
+    * insert of `fresh` commits into the new table before they run: the
+    * stale statements fail, and a SELECT returns `rows`. */
   private def staleInsertsAcrossRecreate(tbl: String, recreate: String,
       fresh: String, rows: Seq[Row]): Unit = {
     engine.execute(s"create table s.$tbl(k int, v double, primary key(k))")
     val td = engine.catalog.getSchema("s", tbl)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    def insert(sql: String): Thread = {
+    def run(sql: String): Thread = {
       val th = new Thread(() =>
         try engine.execute(sql) catch { case e: Throwable => failures.add(e) })
       th.start()
       th
     }
-    def awaitQueued(n: Int, threads: Seq[Thread]): Unit = {
-      while (engine.catalog.queuedAppends(td) < n && threads.forall(_.isAlive))
-        Thread.onSpinWait()
-      assert(engine.catalog.queuedAppends(td) == n)
-    }
-    // two inserts bound to the old table queue ahead of one bound to the
-    // re-created table; all three commit once the lock is released
     engine.catalog.withCommitLock("s", tbl) {
-      val stale = (0 until 2).map(t => insert(s"insert into s.$tbl values($t, 1.0)"))
-      awaitQueued(2, stale)
+      val stale = (0 until 2).map(t => run(s"insert into s.$tbl values($t, 1.0)"))
+      while (engine.catalog.queuedAppends(td) < 2 && stale.forall(_.isAlive))
+        Thread.onSpinWait()
+      assert(engine.catalog.queuedAppends(td) == 2)
+      // the DELETE has resolved the old table once it waits on the lock
+      val delete = run(s"delete from s.$tbl")
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      def parked = delete.getState == Thread.State.WAITING &&
+        delete.getStackTrace.exists(_.getMethodName == "withCommitLock")
+      while (!parked && System.nanoTime() < deadline) Thread.onSpinWait()
+      assert(parked)
       engine.execute(s"drop table s.$tbl")
       engine.execute(s"create table s.$tbl$recreate")
-      val last = insert(s"insert into s.$tbl values$fresh")
-      awaitQueued(3, stale :+ last)
-      stale :+ last
+      // this thread holds the lock, so its insert commits now: the two
+      // stale inserts queued ahead of it fail as one group first
+      engine.execute(s"insert into s.$tbl values$fresh")
+      stale :+ delete
     }.foreach(_.join())
-    assert(failures.size == 2, failures)
+    assert(failures.size == 3, failures)
     failures.asScala.foreach { e =>
       assert(e.isInstanceOf[OtError] &&
         e.getMessage.contains(s"s.$tbl does not exists"), e)
