@@ -376,6 +376,21 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     Some(physToLogical(td, df).drop(SeqCol))
   }
 
+  /** `e`, a failed read of `td`, as a client should see it: the missing
+    * table error when the read failed on a missing file and the table no
+    * longer has `td`'s incarnation (a DROP, or a DROP and a CREATE, landed
+    * after the read resolved), else `e` itself.
+    */
+  private[engine] def readFailure(td: TableDef, e: Throwable): Throwable = {
+    def missingFile(t: Throwable): Boolean = t match {
+      case null => false
+      case _: java.io.FileNotFoundException |
+          _: java.nio.file.NoSuchFileException => true
+      case _ => missingFile(t.getCause)
+    }
+    if (missingFile(e)) gone(td).getOrElse(e) else e
+  }
+
   /** The table's `data/` parquet files. */
   private def dataFiles(td: TableDef): Seq[Path] =
     if (!Files.isDirectory(dataDir(td))) Nil
@@ -702,10 +717,16 @@ final class Catalog(val spark: SparkSession, val warehouse: String) {
     */
   private def withTableLock[A](td: TableDef)(body: => A): A =
     withCommitLock(td.dbName, td.tblName) {
-      if (!tableNow(td).exists(_.incarnation == td.incarnation))
-        throw OtError(s"Table ${td.dbName}.${td.tblName} does not exists")
+      gone(td).foreach(throw _)
       body
     }
+
+  /** The missing-table error when `td`'s table no longer has `td`'s
+    * incarnation: it was dropped or renamed after `td` was resolved.
+    */
+  private def gone(td: TableDef): Option[OtError] =
+    if (tableNow(td).exists(_.incarnation == td.incarnation)) None
+    else Some(OtError(s"Table ${td.dbName}.${td.tblName} does not exists"))
 
   /** Appends queued on the table's commit lock (for specs that park it). */
   private[engine] def queuedAppends(td: TableDef): Int =

@@ -2,10 +2,12 @@ package graft.engine
 
 import graft.operators.Adj
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 import Ast._
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** Permission levels (reference user.go:14-20). */
 object Perm extends Enumeration {
@@ -45,6 +47,7 @@ private object Resolved {
   * plus full Spark SQL/DataFrame passthrough on the same data.
   */
 final class Engine(val spark: SparkSession, val warehouse: String) {
+  import Engine.ReadOf
   import Resolved._
 
   val catalog = new Catalog(spark, warehouse)
@@ -209,7 +212,8 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
           if (wireNs) executeWireNs(sql, args, user, db)
           else executeWithDb(sql, args, user, db)
         if (sql.trim.toLowerCase.startsWith("select")) {
-          val rows = df.limit(maxCacheRows + 1).collect()
+          val rows = try df.limit(maxCacheRows + 1).collect()
+            catch { case NonFatal(e) => throw readFailure(df, e) }
           if (rows.length > maxCacheRows) df
           else {
             if (respCache.size >= maxCacheEntries) {
@@ -648,10 +652,12 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
     // parquet pushdown still prunes before the exchange
     // (Catalog.readTableOrderedDirty). ns remainder columns ride along for
     // predicates and sort; the final projection drops them.
-    var df = catalog.readTableLocal(s.td, s.reverse, pushed, pred)
-      .orElse(catalog.readTableOrdered(s.td, s.reverse, pushed)
-        .map(d => pred.map(d.filter).getOrElse(d)))
-      .getOrElse(catalog.readTableOrderedDirty(s.td, s.reverse, pred))
+    var df = try {
+      catalog.readTableLocal(s.td, s.reverse, pushed, pred)
+        .orElse(catalog.readTableOrdered(s.td, s.reverse, pushed)
+          .map(d => pred.map(d.filter).getOrElse(d)))
+        .getOrElse(catalog.readTableOrderedDirty(s.td, s.reverse, pred))
+    } catch { case NonFatal(e) => throw catalog.readFailure(s.td, e) }
     if (s.limit > 0) df = df.limit(s.limit)
     // projection incl. adj application (reference adj.go:142-202)
     val proj: Seq[Column] =
@@ -674,8 +680,18 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
       if (!keepNs) Nil
       else s.cols.filter(_.tpe == OtType.Timestamp)
         .map(c => col(catalog.nsCol(c.name)))
-    df.select(proj ++ nsProj: _*)
+    val out = df.select(proj ++ nsProj: _*)
+    out.queryExecution.logical.setTagValue(ReadOf, s.td)
+    out
   }
+
+  /** `e`, a failure consuming `df`, as a client should see it: when `df`
+    * is a SELECT result of this engine, [[Catalog.readFailure]] of the
+    * table that SELECT resolved, else `e` itself.
+    */
+  private[engine] def readFailure(df: DataFrame, e: Throwable): Throwable =
+    df.queryExecution.logical.getTagValue(ReadOf)
+      .fold(e)(catalog.readFailure(_, e))
 
   /** Table-valued function dispatch ([[TableFns]]): bind placeholders
     * positionally (function args first, then WHERE values), resolve
@@ -806,6 +822,9 @@ final class Engine(val spark: SparkSession, val warehouse: String) {
 }
 
 object Engine {
+  /** Marks a SELECT result with the table it resolved ([[readFailure]]). */
+  private val ReadOf = TreeNodeTag[TableDef]("graft.readOf")
+
   def sha1(s: String): String = {
     val d = java.security.MessageDigest.getInstance("SHA-1")
     d.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString

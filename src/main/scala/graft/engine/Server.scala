@@ -301,7 +301,7 @@ final class GraftServer(engine: Engine, port: Int = 0,
                   // would be the unbounded collect this path exists to
                   // avoid)
                   val df = engine.executeWireNs(sql, args, user, usedDb)
-                  (streamChunks(df, cr, emitChunk), None, None)
+                  (reply(df)(streamChunks(_, cr, emitChunk)), None, None)
                 case _ =>
                   // cached prepared selects (server.go:342-350) resolve
                   // against the CONNECTION's db and keep the ns
@@ -314,7 +314,7 @@ final class GraftServer(engine: Engine, port: Int = 0,
                         proto = if (useJson) "json" else "bson",
                         db = usedDb, wireNs = true)
                     else engine.executeWireNs(sql, args, user, usedDb)
-                  mergeNs(df) match {
+                  reply(df)(mergeNs) match {
                     case Left(err) => (err, None, None)
                     case Right(rows) =>
                       (if (rows.isEmpty) null else rows, None, None)
@@ -414,6 +414,15 @@ final class GraftServer(engine: Engine, port: Int = 0,
     }
   }
 
+  /** Consume a statement's result for the reply. A SELECT that fails on
+    * a missing file because its table was dropped after the SELECT
+    * resolved fails as that missing table ([[Engine.readFailure]]), not
+    * with the file system's message.
+    */
+  private[engine] def reply[A](df: org.apache.spark.sql.DataFrame)(
+      consume: org.apache.spark.sql.DataFrame => A): A =
+    try consume(df) catch { case NonFatal(e) => throw engine.readFailure(df, e) }
+
   /** Collect a wire-facing result — bounded at `maxWireRows`, a larger
     * result is Left(error), never an unbounded driver collect — and fold
     * every trailing `__ns` remainder column into its timestamp, yielding
@@ -422,7 +431,7 @@ final class GraftServer(engine: Engine, port: Int = 0,
     * statement with no columns (INSERT, DELETE, DDL) has no rows to
     * collect and runs no Spark plan.
     */
-  private def mergeNs(
+  private[engine] def mergeNs(
       df: org.apache.spark.sql.DataFrame): Either[String, Seq[Seq[Any]]] = {
     if (df.schema.isEmpty) return Right(Nil)
     val collected = df.limit(maxWireRows + 1).collect()

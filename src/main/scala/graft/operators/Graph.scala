@@ -682,16 +682,14 @@ object Graph {
     // aggregation's hash(id) partitioning — no half-round re-shuffles
     // or re-broadcasts the score vector at sort-merge scale — and the
     // ∞-norm max doubles as the cache-population job, one job per
-    // half-round where checkpoint+max was two. Every ckptEvery-th
-    // half-round still lands a reliable checkpoint (bounded failure
-    // recompute; superseded anchors freed eagerly).
-    val ckptEvery: Int = math.max(1,
-      edges.sparkSession.conf.getOption("spark.graft.iter.ckptEvery")
-        .map(_.trim.toInt).getOrElse(8))
+    // half-round where checkpoint+max was two. Every
+    // IterState.AnchorEvery-th half-round still lands a reliable
+    // checkpoint (bounded failure recompute; superseded anchors freed
+    // eagerly).
     var sinceAnchor = 0
     var anchor: DataFrame = null
     def stage(df: DataFrame): DataFrame =
-      if (sinceAnchor + 1 >= ckptEvery) {
+      if (sinceAnchor + 1 >= IterState.AnchorEvery) {
         val c = IterCheckpoint(df)
         if (anchor != null) IterCheckpoint.free(anchor)
         anchor = c; sinceAnchor = 0; c

@@ -76,9 +76,9 @@ object IterCheckpoint {
   * and the per-round checkpoint file write+read+delete disappears.
   *
   * Reliability becomes a CADENCE, not a per-round tax: every
-  * `spark.graft.iter.ckptEvery`-th round (default 8) is still
+  * [[IterState.AnchorEvery]]-th round is still
   * reliably checkpointed via [[IterCheckpoint]], so recovery after an
-  * executor loss replays at most ckptEvery rounds from durable files
+  * executor loss replays at most that many rounds from durable files
   * (between anchors, shuffle files and deterministic lineage give the
   * normal intra-job recovery — every round expression here is
   * RNG-free), and the analyzed-plan depth stays bounded for long
@@ -103,9 +103,6 @@ object IterCheckpoint {
   */
 final class IterState(init: DataFrame, eager: Boolean = false) {
   private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-  private val every: Int = math.max(1,
-    init.sparkSession.conf.getOption("spark.graft.iter.ckptEvery")
-      .map(_.trim.toInt).getOrElse(8))
   private var sinceAnchor = 0
   private var anchor: DataFrame = null
   // curMat: the current frame holds storage (a cache entry) to free
@@ -129,7 +126,7 @@ final class IterState(init: DataFrame, eager: Boolean = false) {
     * chain — use [[advance]]).
     */
   def advanceWith[A](df: DataFrame)(action: DataFrame => A): A = {
-    val anchorRound = sinceAnchor + 1 >= every
+    val anchorRound = sinceAnchor + 1 >= IterState.AnchorEvery
     val next =
       if (anchorRound) IterCheckpoint(df)
       else df.persist(lvl)
@@ -155,7 +152,7 @@ final class IterState(init: DataFrame, eager: Boolean = false) {
   def advance(df: DataFrame): DataFrame = {
     if (eager) { advanceWith(df)(_.count()); cur }
     else {
-      val anchorRound = sinceAnchor + 1 >= every
+      val anchorRound = sinceAnchor + 1 >= IterState.AnchorEvery
       if (anchorRound) {
         val next = IterCheckpoint(df)
         if (anchor != null) IterCheckpoint.free(anchor)
@@ -187,4 +184,9 @@ final class IterState(init: DataFrame, eager: Boolean = false) {
     if (curMat) { cur.unpersist(); curMat = false }
     if (anchor != null) { IterCheckpoint.free(anchor); anchor = null }
   }
+}
+
+object IterState {
+  /** Rounds per reliable checkpoint (anchor) of an iterative loop. */
+  val AnchorEvery = 8
 }

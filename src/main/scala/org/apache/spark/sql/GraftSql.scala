@@ -31,6 +31,13 @@ object GraftSql {
       case _ => None
     }
 
+  /** Block until every event posted so far has reached its listeners:
+    * a `QueryExecutionListener` hears of an action on the listener bus,
+    * after the action has returned to its caller.
+    */
+  def awaitListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   def addStrategy(spark: SparkSession,
       strategy: execution.SparkStrategy): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental

@@ -1,0 +1,26 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Paths}
+
+class ProbeSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+  private val sf = "/root/testdata/sf0.001"
+
+  test("Probe times each run and records its Spark actions") {
+    val runs = Probe.probe(spark, sf, Seq("q1_agg"), 2)
+    assert(runs.map(r => (r.query, r.run)) == Seq(("q1_agg", 1), ("q1_agg", 2)))
+    assert(runs.forall(_.wallS > 0))
+    assert(runs.forall(_.actions.nonEmpty))
+    assert(runs.flatMap(_.actions).forall(a => a.wallS >= 0 && a.plan.isEmpty))
+  }
+
+  test("Probe writes the last run's formatted plans to a plan directory") {
+    val dir = Files.createTempDirectory("probe-plans").toString
+    val runs = Probe.probe(spark, sf, Seq("q1_agg"), 1, Some(dir))
+    assert(runs.head.actions.forall(_.plan.contains("== Physical Plan ==")))
+    val text = Files.readString(Paths.get(dir, "q1_agg.txt"))
+    assert(text.contains("== action: "))
+    assert(text.contains("== Physical Plan =="))
+  }
+}

@@ -62,6 +62,20 @@ class ServerSpec extends AnyFunSuite {
     assert(e3.msg == "xx does not exist")
   }
 
+  test("a SELECT that loses its table to a DROP replies the missing-table error") {
+    engine.execute("create database dr")
+    engine.execute("create table dr.t(a int, v double, primary key(a))")
+    engine.execute("insert into dr.t values(1, 1.5)")
+    // a clean table's Spark read opens its files only when it runs
+    engine.catalog.compact(engine.tableSchemaOf("dr", "t"))
+    val df = SparkReads.forced(spark, engine.warehouse, "dr", "t")(
+      engine.executeWireNs("select * from dr.t", Nil, None, ""))
+    assert(!df.queryExecution.executedPlan.toString.contains("LocalTableScan"))
+    engine.execute("drop table dr.t")
+    val e = intercept[OtError](server.reply(df)(server.mergeNs))
+    assert(e.msg == "Table dr.t does not exists")
+  }
+
   test("nanosecond round trip over the wire: (sec, nsec) in, (sec, nsec) out") {
     client.execute("create table net.ns(k int, tm timestamp, v double, " +
       "primary key(k, tm))")
