@@ -1071,7 +1071,8 @@ object Queries {
               length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS n_alpha
               FROM documents ORDER BY doc_id""")),
 
-    // ── custom operator: distributed as-of join (SURVEY.md §2.4/§2.6) ──
+    // ── custom operator: distributed as-of join (SURVEY.md §2.4/§2.6),
+    //    the sort-merge AsOfJoinExec (plans.NativeAsOf) ──
     QueryDef(
       "q_asof_backward",
       (s, dir) => {
@@ -1081,8 +1082,8 @@ object Queries {
         val purchases = ev.filter(col("event_type") === "purchase")
           .select(col("user_id"), col("ts"),
             col("value").as("last_purchase"), col("event_id").as("p_eid"))
-        operators.AsOfJoin.backward(clicks, purchases, Seq("user_id"),
-            "ts", "ts", Seq("last_purchase"), rightTieBreak = Seq("p_eid"))
+        plans.NativeAsOf.backward(clicks, purchases, Seq("user_id"),
+            "ts", "ts", Seq("last_purchase"), tieBreak = Seq("p_eid"))
           .select("user_id", "event_id", "last_purchase")
           .orderBy("user_id", "event_id")
       },
@@ -1095,8 +1096,8 @@ object Queries {
               ORDER BY b.user_id, b.event_id""")),
 
     // ── as-of FORWARD: earliest right row at-or-after each left time
-    //    (min tiebreak on equal times), same composed union+window
-    //    machinery as backward ──
+    //    (min tiebreak on equal times), same merge as backward over a
+    //    descending time sort ──
     QueryDef(
       "q_asof_forward",
       (s, dir) => {
@@ -1106,8 +1107,8 @@ object Queries {
         val purchases = ev.filter(col("event_type") === "purchase")
           .select(col("user_id"), col("ts"),
             col("value").as("next_purchase"), col("event_id").as("p_eid"))
-        operators.AsOfJoin.forward(clicks, purchases, Seq("user_id"),
-            "ts", "ts", Seq("next_purchase"), rightTieBreak = Seq("p_eid"))
+        plans.NativeAsOf.forward(clicks, purchases, Seq("user_id"),
+            "ts", "ts", Seq("next_purchase"), tieBreak = Seq("p_eid"))
           .select("user_id", "event_id", "next_purchase")
           .orderBy("user_id", "event_id")
       },
@@ -1119,9 +1120,9 @@ object Queries {
               FROM events b WHERE b.event_type = 'click'
               ORDER BY b.user_id, b.event_id""")),
 
-    // ── custom operator, Catalyst-native form: AsOfJoinNode/Exec
-    //    (LogicalPlan + SparkStrategy + sort-merge SparkPlan) — same
-    //    oracle as the composed q_asof_backward ──
+    // ── q_asof_backward again, with the right time column under
+    //    another name (`pts`): the same AsOfJoinNode/Exec engine and the
+    //    same oracle ──
     QueryDef(
       "q_asof_native",
       (s, dir) => {
@@ -1164,8 +1165,6 @@ object Queries {
         val bars = ev.filter(col("event_type") === "view")
           .select(col("user_id").as("sec"), col("ts"), col("event_id"),
             col("value"))
-        // native exec adoption: the sort-merge AsOfJoinExec outruns the
-        // composed union+window form (~15% at sf0.1) with the same oracle
         plans.NativeAsOf.forward(bars, factors, Seq("sec"), "ts", "tm",
             Seq("px_f"), strict = true, tieBreak = Seq("idx"))
           .select(col("sec"), expr("ts div 1000").as("ts_us"),
@@ -5204,8 +5203,8 @@ object Queries {
               ORDER BY src, knn_rank""")),
 
     // ── as-of NEAREST: smallest |Δt| per key, ties toward the earlier
-    //    (backward) right row — one shuffle + one sort serving both
-    //    directional window picks (see AsOfJoin.nearest). ──
+    //    (backward) right row — the backward merge, which also sees
+    //    the first right row after each left time (NativeAsOf.nearest) ──
     QueryDef(
       "q_asof_nearest",
       (s, dir) => {
@@ -5215,8 +5214,8 @@ object Queries {
         val purchases = ev.filter(col("event_type") === "purchase")
           .select(col("user_id"), col("ts"),
             col("value").as("near_purchase"), col("event_id").as("p_eid"))
-        operators.AsOfJoin.nearest(clicks, purchases, Seq("user_id"),
-            "ts", "ts", Seq("near_purchase"), rightTieBreak = Seq("p_eid"))
+        plans.NativeAsOf.nearest(clicks, purchases, Seq("user_id"),
+            "ts", "ts", Seq("near_purchase"), tieBreak = Seq("p_eid"))
           .select("user_id", "event_id", "near_purchase")
           .orderBy("user_id", "event_id")
       },
@@ -5650,8 +5649,9 @@ object Queries {
 
     // ── feature-store POINT-IN-TIME join: each purchase gets the
     //    latest click value AND the latest view value at-or-before it
-    //    (no leakage from the future) — two chained as-of merges, each
-    //    one shuffle on user_id. ──
+    //    (no leakage from the future) — two chained as-of merges; the
+    //    second keeps the first's partitioning and order, so each input
+    //    shuffles once on user_id. ──
     QueryDef(
       "q_feature_join",
       (s, dir) => {
@@ -5662,12 +5662,12 @@ object Queries {
           ev.filter(col("event_type") === tpe)
             .select(col("user_id"), col("ts"), col("value").as(out),
               col("event_id").as(s"${out}_eid"))
-        val step1 = operators.AsOfJoin.backward(purchases,
+        val step1 = plans.NativeAsOf.backward(purchases,
           feat("click", "last_click"), Seq("user_id"), "ts", "ts",
-          Seq("last_click"), rightTieBreak = Seq("last_click_eid"))
-        operators.AsOfJoin.backward(step1,
+          Seq("last_click"), tieBreak = Seq("last_click_eid"))
+        plans.NativeAsOf.backward(step1,
             feat("view", "last_view"), Seq("user_id"), "ts", "ts",
-            Seq("last_view"), rightTieBreak = Seq("last_view_eid"))
+            Seq("last_view"), tieBreak = Seq("last_view_eid"))
           .select("user_id", "event_id", "last_click", "last_view")
           .orderBy("user_id", "event_id")
       },

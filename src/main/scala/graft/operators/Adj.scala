@@ -109,7 +109,7 @@ object Adj {
       secCol.cast("int"), unix_micros(tmCol), bc, which, backward)
 
   /** Fully-distributed factor table for large event sets: one row per
-    * (sec, event) with forward/backward factors — feeds [[AsOfJoin]]
+    * (sec, event) with forward/backward factors — feeds [[graft.plans.NativeAsOf]]
     * when the broadcast path is too big. Input columns:
     * (sec INT-castable, tm LONG, px DOUBLE, vol DOUBLE); null/zero
     * px/vol are treated as 1. Output adds `idx`, the per-sec sorted

@@ -7,25 +7,40 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
-/** Whole-operator Catalyst integration for the backward as-of join —
-  * SURVEY.md §7.4 tier (c): a custom LogicalPlan + Strategy + SparkPlan.
+/** Which right row an as-of join attaches to each left row. */
+sealed trait AsOfDirection
+object AsOfDirection {
+  /** latest right row at-or-before the left time */
+  case object Backward extends AsOfDirection
+  /** earliest right row at-or-after the left time */
+  case object Forward extends AsOfDirection
+  /** smallest |Δt|; the backward row wins equal distances and Δ=0 */
+  case object Nearest extends AsOfDirection
+}
+
+/** The as-of join as a Catalyst operator — SURVEY.md §7.4 tier (c): a
+  * custom LogicalPlan + Strategy + SparkPlan.
   *
-  * Unlike the union+window formulation ([[graft.operators.AsOfJoin]],
-  * two window passes over the merged stream), the physical operator
-  * sort-merges the two sides directly: EnsureRequirements co-partitions
-  * both children on the join keys and sorts them by (keys, time), then
-  * each partition pair is merged in one forward pass carrying the
-  * latest-visible right row — O(|L|+|R|) per partition, no window state,
-  * rows stream straight through.
+  * The physical operator sort-merges the two sides directly:
+  * EnsureRequirements co-partitions both children on the join keys and
+  * sorts them by (keys, time), then each partition pair is merged in one
+  * forward pass carrying the latest-visible right row — O(|L|+|R|) per
+  * partition, no window state, rows stream straight through.
+  *
+  * A left row whose key or time is null gets a null payload; a right row
+  * whose key or time is null is skipped (an SQL `=`/`<=` never matches a
+  * null).
   */
 case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
     leftKeys: Seq[Expression], rightKeys: Seq[Expression],
     leftTime: Expression, rightTime: Expression,
     payload: Seq[NamedExpression], strict: Boolean,
-    forward: Boolean,
+    direction: AsOfDirection,
     rightTieBreak: Seq[Expression] = Nil) extends BinaryNode {
+  require(!(strict && direction == AsOfDirection.Nearest),
+    "as-of nearest has no strict form")
   override def output: Seq[Attribute] =
     left.output ++ payload.map(_.toAttribute.withNullability(true))
   override protected def withNewChildrenInternal(l: LogicalPlan,
@@ -34,9 +49,9 @@ case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
 
 object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinNode(l, r, lk, rk, lt, rt, payload, strict, fwd, tb) =>
+    case AsOfJoinNode(l, r, lk, rk, lt, rt, payload, strict, dir, tb) =>
       AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, payload,
-        strict, fwd, tb) :: Nil
+        strict, dir, tb) :: Nil
     case _ => Nil
   }
 }
@@ -45,7 +60,7 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     leftKeys: Seq[Expression], rightKeys: Seq[Expression],
     leftTime: Expression, rightTime: Expression,
     payload: Seq[NamedExpression], strict: Boolean,
-    forward: Boolean,
+    direction: AsOfDirection,
     rightTieBreak: Seq[Expression] = Nil) extends BinaryExecNode {
 
   override def output: Seq[Attribute] =
@@ -56,16 +71,17 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
 
-  // Sorted merge input: keys ascending, time ascending (backward) or
-  // descending (forward — the merge then carries the earliest-visible
-  // right row symmetrically). The merge keeps the LAST visible right row
-  // it consumes, so tiebreak columns sort in the SAME direction as time:
-  // at equal times backward keeps the greatest tiebreak, forward the
-  // smallest — matching the composed operator and the
+  // Sorted merge input: keys ascending, time ascending (backward,
+  // nearest) or descending (forward — the merge then carries the
+  // earliest-visible right row symmetrically). The merge keeps the LAST
+  // visible right row it consumes, so tiebreak columns sort in the SAME
+  // direction as time: at equal times backward keeps the greatest
+  // tiebreak, forward the smallest — matching the
   // "ORDER BY ts DESC, id DESC LIMIT 1" correlated-subquery oracle. With
   // no tiebreak, equal-time winners follow whatever order the sort
   // emitted (nondeterministic across runs).
-  private def timeDir: SortDirection = if (forward) Descending else Ascending
+  private def timeDir: SortDirection =
+    if (direction == AsOfDirection.Forward) Descending else Ascending
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTime, timeDir),
     rightKeys.map(SortOrder(_, Ascending)) :+ SortOrder(rightTime, timeDir)
@@ -78,7 +94,8 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     val lKeyTypes = leftKeys.map(_.dataType)
     val timeType = leftTime.dataType
     val strictLocal = strict
-    val forwardLocal = forward
+    val forwardLocal = direction == AsOfDirection.Forward
+    val nearestLocal = direction == AsOfDirection.Nearest
     val numPayload = payload.length
 
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
@@ -100,13 +117,21 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
         private var rHeadKey: UnsafeRow = _
         private var rHeadTime: UnsafeRow = _
         private var lastKey: UnsafeRow = _ // key of buffered payload
+        private var lastTime: UnsafeRow = _ // time of buffered payload
         private var lastPayload: UnsafeRow = _
+        // the next right row with a non-null key and time, or null
         private def advanceRightHead(): Unit = {
-          if (rIter.hasNext) {
-            rHead = rIter.next()
-            rHeadKey = rKeyProj(rHead).copy()
-            rHeadTime = rTimeEval(rHead).copy()
-          } else { rHead = null }
+          rHead = null
+          while (rHead == null && rIter.hasNext) {
+            val r = rIter.next()
+            val k = rKeyProj(r)
+            val t = rTimeEval(r)
+            if (!k.anyNull && !t.anyNull) {
+              rHead = r
+              rHeadKey = k.copy()
+              rHeadTime = t.copy()
+            }
+          }
         }
         advanceRightHead()
 
@@ -115,28 +140,42 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
           val lRow = lIter.next()
           val lKey = lKeyProj(lRow)
           val lTime = lTimeEval(lRow)
-          // consume right rows visible to this left row
-          var continue = rHead != null
-          while (continue) {
-            val kc = keyOrd.compare(rHeadKey, lKey)
-            val visible = kc < 0 || (kc == 0 && {
-              val tc0 = timeOrd.compare(rHeadTime, lTime)
-              val tc = if (forwardLocal) -tc0 else tc0
-              if (strictLocal) tc < 0 else tc <= 0
-            })
-            if (visible) {
-              if (kc == 0) {
-                lastKey = rHeadKey
-                lastPayload = payloadProj(rHead).copy()
-              }
-              advanceRightHead()
-              continue = rHead != null
-            } else continue = false
-          }
           val p =
-            if (lastPayload != null && keyOrd.compare(lastKey, lKey) == 0)
-              lastPayload
-            else nullPayload
+            if (lKey.anyNull || lTime.anyNull) nullPayload
+            else {
+              // consume right rows visible to this left row
+              var continue = rHead != null
+              while (continue) {
+                val kc = keyOrd.compare(rHeadKey, lKey)
+                val visible = kc < 0 || (kc == 0 && {
+                  val tc0 = timeOrd.compare(rHeadTime, lTime)
+                  val tc = if (forwardLocal) -tc0 else tc0
+                  if (strictLocal) tc < 0 else tc <= 0
+                })
+                if (visible) {
+                  if (kc == 0) {
+                    lastKey = rHeadKey
+                    lastTime = rHeadTime
+                    lastPayload = payloadProj(rHead).copy()
+                  }
+                  advanceRightHead()
+                  continue = rHead != null
+                } else continue = false
+              }
+              val carried =
+                lastPayload != null && keyOrd.compare(lastKey, lKey) == 0
+              // nearest: the right head is now the earliest same-key row
+              // strictly after the left time (smallest tiebreak there);
+              // it wins only when strictly closer than the carried row
+              val ahead = nearestLocal && rHead != null &&
+                keyOrd.compare(rHeadKey, lKey) == 0 && (!carried || {
+                  val t = lTime.getLong(0)
+                  rHeadTime.getLong(0) - t < t - lastTime.getLong(0)
+                })
+              if (ahead) payloadProj(rHead)
+              else if (carried) lastPayload
+              else nullPayload
+            }
           outProj(joined(lRow, p))
         }
       }
@@ -162,7 +201,7 @@ object NativeAsOf {
       leftTime: String, rightTime: String, payload: Seq[String],
       strict: Boolean = false, tieBreak: Seq[String] = Nil): DataFrame =
     join(left, right, by, leftTime, rightTime, payload, strict,
-      forward = false, tieBreak)
+      AsOfDirection.Backward, tieBreak)
 
   /** Forward as-of: the payload of the EARLIEST right row with the same
     * key and rightTime >= leftTime (> when strict). At equal right times
@@ -172,11 +211,26 @@ object NativeAsOf {
       leftTime: String, rightTime: String, payload: Seq[String],
       strict: Boolean = false, tieBreak: Seq[String] = Nil): DataFrame =
     join(left, right, by, leftTime, rightTime, payload, strict,
-      forward = true, tieBreak)
+      AsOfDirection.Forward, tieBreak)
+
+  /** Nearest-in-time as-of: the payload of the right row with the same
+    * key and the smallest |rightTime − leftTime|. The backward row wins
+    * an equal distance, and an equal-time right row counts as backward;
+    * then the per-side tie rules of [[backward]]/[[forward]] apply
+    * (backward keeps the greatest `tieBreak`, forward the smallest).
+    * Time columns must be long or timestamp, so the distance is exact
+    * integer arithmetic.
+    */
+  def nearest(left: DataFrame, right: DataFrame, by: Seq[String],
+      leftTime: String, rightTime: String, payload: Seq[String],
+      tieBreak: Seq[String] = Nil): DataFrame =
+    join(left, right, by, leftTime, rightTime, payload, strict = false,
+      AsOfDirection.Nearest, tieBreak)
 
   private def join(left: DataFrame, right: DataFrame, by: Seq[String],
       leftTime: String, rightTime: String, payload: Seq[String],
-      strict: Boolean, forward: Boolean, tieBreak: Seq[String]): DataFrame = {
+      strict: Boolean, direction: AsOfDirection,
+      tieBreak: Seq[String]): DataFrame = {
     val spark = left.sparkSession
     register(spark)
     val lPlan = GraftSql.logicalPlan(left)
@@ -201,8 +255,12 @@ object NativeAsOf {
     require(lt.dataType == rt.dataType,
       s"as-of time type mismatch: $leftTime ${lt.dataType} vs " +
         s"$rightTime ${rt.dataType}")
+    require(direction != AsOfDirection.Nearest ||
+        lt.dataType == LongType || lt.dataType == TimestampType,
+      s"as-of nearest time type unsupported: $leftTime ${lt.dataType} " +
+        "(needs long or timestamp)")
     val node = AsOfJoinNode(lPlan, rPlan, lk, rk, lt, rt,
-      payload.map(attr(rPlan, _)), strict, forward,
+      payload.map(attr(rPlan, _)), strict, direction,
       tieBreak.map(attr(rPlan, _)))
     GraftSql.ofRows(spark, node)
   }

@@ -8,50 +8,6 @@ class OperatorsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private lazy val left = Seq(
-    (1, 10L, "a"), (1, 20L, "b"), (1, 30L, "c"), (2, 15L, "d"))
-    .toDF("k", "t", "tag")
-  private lazy val right = Seq(
-    (1, 10L, 100.0, 1L), (1, 10L, 101.0, 2L), (1, 25L, 200.0, 3L),
-    (3, 5L, 999.0, 4L))
-    .toDF("k", "rt", "v", "eid")
-
-  test("asof backward: latest at-or-before, max tiebreak on equal times") {
-    val out = AsOfJoin.backward(left, right, Seq("k"), "t", "rt",
-        Seq("v"), rightTieBreak = Seq("eid"))
-      .orderBy("k", "t").collect().toSeq
-    assert(out == Seq(
-      Row(1, 10L, "a", 101.0), // equal time visible; eid=2 wins over eid=1
-      Row(1, 20L, "b", 101.0),
-      Row(1, 30L, "c", 200.0),
-      Row(2, 15L, "d", null))) // no right rows for k=2
-  }
-
-  test("asof backward strict: equal times excluded") {
-    val out = AsOfJoin.backward(left, right, Seq("k"), "t", "rt",
-        Seq("v"), rightTieBreak = Seq("eid"), strict = true)
-      .orderBy("k", "t").collect().toSeq
-    assert(out.head == Row(1, 10L, "a", null))
-  }
-
-  test("asof forward: earliest at-or-after, min tiebreak on equal times") {
-    val out = AsOfJoin.forward(left, right, Seq("k"), "t", "rt",
-        Seq("v"), rightTieBreak = Seq("eid"))
-      .orderBy("k", "t").collect().toSeq
-    assert(out == Seq(
-      Row(1, 10L, "a", 100.0), // equal time visible; eid=1 wins (smallest)
-      Row(1, 20L, "b", 200.0),
-      Row(1, 30L, "c", null), // nothing after t=30
-      Row(2, 15L, "d", null)))
-  }
-
-  test("asof forward strict: equal times excluded") {
-    val out = AsOfJoin.forward(left, right, Seq("k"), "t", "rt",
-        Seq("v"), rightTieBreak = Seq("eid"), strict = true)
-      .orderBy("k", "t").collect().toSeq
-    assert(out.head == Row(1, 10L, "a", 200.0))
-  }
-
   test("ohlcv bars: open/close respect time+tiebreak order") {
     val ticks = Seq(
       (1, 0L, 1L, 10.0), (1, 5L, 2L, 30.0), (1, 9L, 3L, 20.0),
@@ -858,24 +814,6 @@ class OperatorsSpec extends AnyFunSuite {
       assert(e >= exact && e - exact < 2 * width,
         s"$g q$qpm: est $e exact $exact")
     }
-  }
-
-  test("asof nearest: closer side wins, backward wins distance ties") {
-    val out = AsOfJoin.nearest(left, right, Seq("k"), "t", "rt",
-        Seq("v"), rightTieBreak = Seq("eid"))
-      .orderBy("k", "t").collect().toSeq
-    assert(out == Seq(
-      Row(1, 10L, "a", 101.0), // Δ=0 backward; greatest eid at equal rt
-      Row(1, 20L, "b", 200.0), // next Δ=5 beats prev Δ=10
-      Row(1, 30L, "c", 200.0), // only prev exists
-      Row(2, 15L, "d", null)))
-    // exact distance tie: prev (backward) wins
-    val lt = Seq((1, 17L)).toDF("k", "t")
-    val rt = Seq((1, 10L, 1.0, 1L), (1, 24L, 2.0, 2L))
-      .toDF("k", "rt", "v", "eid")
-    val tie = AsOfJoin.nearest(lt, rt, Seq("k"), "t", "rt", Seq("v"),
-      rightTieBreak = Seq("eid")).collect()
-    assert(tie.head.getAs[Double]("v") == 1.0)
   }
 
   test("skyline2D: equals brute-force dominance, frontier dups survive") {
