@@ -8,8 +8,9 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Times named registry queries through the `noop` sink, as [[Bench]]
   * does, and splits each run into its Spark actions: an iterative
-  * operator runs many (round checkpoints, convergence collects) whose
-  * plans a final `explain` never shows. Usage:
+  * operator runs many (round materializations, convergence collects)
+  * whose plans a final `explain` never shows. One untimed pass over the
+  * whole list runs first. Usage:
   *   runMain graft.Probe <sfDir> <name>[,<name>…] [runs] [planDir]
   * It prints each run's wall with each action's wall, then each query's
   * best wall. With `planDir` it writes `<planDir>/<name>.txt`, every
@@ -39,7 +40,11 @@ object Probe {
           e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    try for (name <- names; r <- 1 to runs) yield {
+    // an untimed pass (run 0) over the whole list comes first, so a
+    // query's best does not depend on how much the queries before it
+    // warmed the JVM and Spark
+    val order = names.map((_, 0)) ++ names.flatMap(n => (1 to runs).map((n, _)))
+    try order.flatMap { case (name, r) =>
       withPlans = planDir.isDefined && r == runs
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)
@@ -57,7 +62,7 @@ object Probe {
             run.actions.map(a => f"%n== action: ${a.name}  wall=${a.wallS}%.3f s ==%n${a.plan}")
               .mkString)
       }
-      run
+      Some(run).filter(_.run > 0)
     } finally spark.listenerManager.unregister(listener)
   }
 

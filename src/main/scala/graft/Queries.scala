@@ -90,7 +90,7 @@ object Queries {
     * cluster labels are a build-once artifact the accounting queries
     * (`q_cluster_reps`) amortize, while `q_dedup_components` itself
     * times the full mine+fixpoint build FRESH on purpose. The returned
-    * labels are reliably checkpoint-backed ([[operators.IterCheckpoint]]),
+    * labels are reliably checkpoint-backed ([[operators.IterState.durable]]),
     * so reuse reads checkpoint files, not lineage.
     */
   private val ccMemo = new java.util.concurrent.ConcurrentHashMap[
@@ -6461,18 +6461,14 @@ object Queries {
     //    root 0, accumulating depth + chain balance through TABLE
     //    joins per level (the manager row must exist). Spark has no
     //    recursive CTE, so the fixpoint is an explicit loop — log₂(N)
-    //    rounds, state reliably checkpointed every 6 rounds
-    //    ([[operators.IterCheckpoint]]) so lineage stays bounded on a
-    //    real cluster. ──
+    //    rounds over an [[operators.IterState]], whose anchors keep
+    //    lineage bounded on a real cluster. ──
     QueryDef(
       "q_org_chain",
       (s, dir) => {
-        // r12 re-tune (guide §1.2): the level count is ⌊log₂ maxKey⌋+2
-        // — ONE max() job replaces the per-round count() actions that
-        // each replayed the whole since-last-checkpoint lineage; cents
-        // is persisted (it joins every level), and each level's
-        // `stepped` is persisted so its three consumers (fin branch,
-        // next level, the final action) share one materialization.
+        // the level count is ⌊log₂ maxKey⌋+2 — ONE max() job, no
+        // per-round count() actions; cents is persisted (it joins every
+        // level)
         val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val cents = t(s, dir, "customer")
           .select(col("c_custkey").as("node"),
@@ -6484,25 +6480,29 @@ object Queries {
         val rounds =
           if (maxId <= 0L) 1
           else 64 - java.lang.Long.numberOfLeadingZeros(maxId) + 1
-        var active = cents.select(col("node").as("id"),
-          col("node").as("cur"), lit(0L).as("depth"), lit(0L).as("acc"))
-        var done: DataFrame = null
-        for (r <- 1 to rounds) {
-          val stepped = active
-            .join(cents, active("cur") === cents("node"))
-            .select(col("id"), col("cur"), col("depth"),
-              (col("acc") + col("cents")).as("acc"))
-            .persist(lvl)
-          val fin = stepped.filter(col("cur") === 0L)
-            .select(col("id"), col("depth"), col("acc").as("chain_cents"))
-          done = if (done == null) fin else done.union(fin)
-          val next = stepped.filter(col("cur") > 0L)
-            .select(col("id"), expr("cur div 2").as("cur"),
-              (col("depth") + 1L).as("depth"), col("acc"))
-          active =
-            if (r % 6 == 0) operators.IterCheckpoint(next) else next
+        // one row per chain: a finished chain (`fin`, it has visited the
+        // root) rides along unchanged, so each level reads the state once
+        // and levels chain lazily; a chain whose manager row is missing
+        // drops out, as an inner join drops it
+        val mgr = cents.select(col("node").as("mgr"), col("cents").as("mc"))
+        val st = new operators.IterState(cents.select(col("node").as("id"),
+          col("node").as("cur"), lit(0L).as("depth"), lit(0L).as("acc"),
+          lit(false).as("fin")))
+        val climb = !col("fin") && col("cur") =!= 0L
+        for (_ <- 1 to rounds) {
+          st.advance(st.frame
+            .join(mgr, col("cur") === col("mgr") && !col("fin"), "left")
+            .filter(col("fin") || col("mgr").isNotNull)
+            .select(col("id"),
+              when(climb, expr("cur div 2")).otherwise(col("cur")).as("cur"),
+              when(climb, col("depth") + 1L).otherwise(col("depth"))
+                .as("depth"),
+              (col("acc") + coalesce(col("mc"), lit(0L))).as("acc"),
+              (col("fin") || col("cur") === 0L).as("fin")))
         }
-        done.orderBy("id")
+        st.finish().filter(col("fin"))
+          .select(col("id"), col("depth"), col("acc").as("chain_cents"))
+          .orderBy("id")
       },
       Some("""WITH RECURSIVE ch AS (
                 SELECT c_custkey AS id, c_custkey AS cur, 0 AS depth

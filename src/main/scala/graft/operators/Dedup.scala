@@ -424,13 +424,11 @@ object Dedup {
     * convergence is typically 2-4 rounds regardless of corpus size.
     * Each round is one join + one map-side-combined min — the standard
     * scalable shape (what GraphX's cc computes, without the GraphX
-    * dependency). Labels RELIABLY checkpoint per round
-    * ([[IterCheckpoint]]): lineage stays one round deep (no 20-join
-    * plan tree), state survives executor loss (localCheckpoint blocks
-    * would not), and each superseded round's files are deleted eagerly
-    * (GC-based cleanup is "effectively never" inside a long
-    * bench/streaming session). The final `changed == 0` round
-    * certifies the fixpoint.
+    * dependency). Labels are [[IterState]] rounds: each round plans
+    * over a leaf of the one before (no 20-join plan tree), and
+    * superseded rounds are freed eagerly. The final `changed == 0`
+    * round certifies the fixpoint, and the returned labels are a
+    * reliable checkpoint.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25): DataFrame = {
@@ -446,22 +444,18 @@ object Dedup {
       .distinct()
       .persist(lvl)
     // state carries a per-row changed flag so convergence is ONE sum
-    // over the freshly checkpointed round (r12: the previous
+    // over the freshly stored round (r12: the previous
     // `changed` was a second full join of two label checkpoints per
     // round); chg ⇔ the new comp strictly decreased ⇔ min_nbr < comp
-    // (null-safe: a node with no in-neighbors keeps its comp)
-    // eager cache-backed round state (r13, [[IterState]]): the label
-    // table is read twice per round (neighbor-min input and merge
+    // (null-safe: a node with no in-neighbors keeps its comp). The
+    // label table is read twice per round (neighbor-min input and merge
     // input) and the loop takes a per-round convergence action, so
-    // rounds are materialized into a partitioning-preserving cache —
-    // the convergence sum doubles as the cache-population job, one job
-    // per round where checkpoint+sum was two, and no round re-shuffles
-    // or re-broadcasts the label vector at sort-merge scale. Reliable
-    // checkpoints land on the IterState anchor cadence.
+    // rounds are materialized, the convergence sum being the job that
+    // stores each one.
     val st = new IterState(
       edges.select(col("src").as("id")).distinct()
         .withColumn("comp", col("id"))
-        .withColumn("__chg", lit(0L)), eager = true)
+        .withColumn("__chg", lit(0L)))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -491,7 +485,7 @@ object Dedup {
     // returned labels stay a DIRECT reliable checkpoint (file-backed
     // handle — the OperatorsSpec executor-loss guarantee and the
     // ccMemo reuse contract), then free the flagged round state
-    val out = IterCheckpoint(st.frame.select(col("id"), col("comp")))
+    val out = IterState.durable(st.frame.select(col("id"), col("comp")))
     st.release()
     out
   }

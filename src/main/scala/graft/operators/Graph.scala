@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.DoubleType
   * join-per-round shape (no GraphX dependency, no vertex mirroring):
   * each round is one hash join on the node id plus one keyed
   * aggregation, so a round's cost is the cost of a shuffle over the
-  * edge table and the per-round state is freed eagerly (the
-  * [[Dedup.connectedComponents]] checkpoint discipline).
+  * edge table and the per-round state is freed eagerly
+  * ([[IterState]]).
   */
 object Graph {
   /** PageRank over a directed edge list, `iterations` synchronous
@@ -43,10 +43,9 @@ object Graph {
     * ranks⋈outDeg join entirely. A round is therefore: one
     * co-partitioned edges⋈ranks join on src, one map-side-combined
     * sum on the destination, one co-partitioned outer merge — the
-    * message-passing minimum. Round state is RELIABLY checkpointed
-    * (partitioning preserved) and superseded rounds freed eagerly via
-    * [[IterCheckpoint]] (survives executor loss; localCheckpoint
-    * blocks would not). Rounds are O(diameter)-free: `iterations` is
+    * message-passing minimum. Round state is an [[IterState]] chain
+    * (partitioning preserved, reliable anchors, superseded rounds
+    * freed eagerly). Rounds are O(diameter)-free: `iterations` is
     * fixed, so total work is iterations × one message shuffle
     * regardless of graph shape.
     */
@@ -68,12 +67,7 @@ object Graph {
     // bounded driver collect: one scalar (node count feeds the teleport
     // constant — the PQ-sample/vocab-top-K pattern)
     val n = nodesOd.count()
-    // round state managed by [[IterState]] (r13): rounds chain LAZILY
-    // between reliable anchors, so the state keeps the hash(id)
-    // partitioning its merge produced — no exchange on either input of
-    // the round joins at sort-merge scale, and no per-round checkpoint
-    // file write+read (the state is referenced once per round, so the
-    // final action executes the whole inter-anchor chain as one job)
+    // each round reads the ranks once, so rounds chain lazily
     val st = new IterState(
       nodesOd.select(col("id"), lit(1.0 / n).as("rank"), col("od")))
     for (_ <- 1 to iterations) {
@@ -139,8 +133,7 @@ object Graph {
         when(col("__s").isNotNull, lit(1.0 / nSeeds))
           .otherwise(lit(0.0)).as("tele"), col("od"))
       .persist(lvl)
-    // lazy-chained round state with anchor-cadence checkpoints (r13,
-    // [[IterState]]): the pageRank rationale, exactly
+    // each round reads the ranks once, so rounds chain lazily
     val st = new IterState(
       base.select(col("id"), col("tele").as("rank"), col("od")))
     for (_ <- 1 to iterations) {
@@ -290,44 +283,35 @@ object Graph {
     * Scale shape: a round is one map-side-combined degree count plus
     * two semi-joins of the edge list against the (shrinking) survivor
     * set — all hash-partitioned on the node id, no windows, no driver
-    * state. Each round's edge list is cut from its lineage via
-    * [[IterCheckpoint]] (superseded rounds freed eagerly): without the
-    * cut, round r's plan re-derives every earlier round — the degree
-    * count AND both semi-joins re-expand the whole prefix, so work
-    * grows geometrically in `rounds` instead of linearly.
+    * state. Each round's edge list is a stored [[IterState]] round (a
+    * plan leaf): without the cut, round r's plan re-derives every
+    * earlier round — the degree count AND both semi-joins re-expand
+    * the whole prefix, so work grows geometrically in `rounds` instead
+    * of linearly.
     * Returns surviving (node, degree) — degree within the core.
     */
   def kcorePeel(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k,rounds >= 1, got $k,$rounds")
     // NOT pre-partitioned (unlike the persisted-edge operators, r12):
-    // a checkpoint's LogicalRDD comes back with UnknownPartitioning
-    // under AQE, so a seed repartition would help only round 1 while
-    // paying a full extra edge exchange — measured slower. Each round
-    // already runs on one post-partial-agg degree exchange plus
-    // broadcast-able semi joins. r13: the round state (the shrinking
-    // edge list, referenced three times per round) is a materialized
-    // CACHE instead of checkpoint files — same lineage cut, no file
-    // write+read per round, anchor-cadence reliable checkpoints via
-    // [[IterState]].
+    // a seed repartition would help only round 1 while paying a full
+    // extra edge exchange — measured slower. Each round already runs
+    // on one post-partial-agg degree exchange plus broadcast-able semi
+    // joins. A round reads the shrinking edge list three times, so
+    // rounds are materialized.
     val st = new IterState(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
-      eager = true)
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     for (_ <- 1 to rounds) {
       val e = st.frame
       val keep = e.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("src")
-      st.advance(
+      st.advanceWith(
         e.join(keep, Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("src", "dst"), Seq("dst"),
-            "left_semi"))
+            "left_semi"))(_.count())
     }
-    val out = st.finish().groupBy(col("src").as("node"))
+    st.finish().groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("degree"))
-    // the final round's cache (or anchor files) backs `out` lazily;
-    // bench/verify sessions clear caches per query (bounded: one
-    // round's edges)
-    out
   }
 
   /** Link prediction by COMMON-NEIGHBOR count: candidate pairs are the
@@ -432,8 +416,8 @@ object Graph {
     * argmax as a SECOND AGGREGATION — max(struct(ws, −nl)) is
     * map-side-combinable and shuffles at most one row per node per
     * partition, where the previous row_number window re-shuffled and
-    * sorted every (node, label) score row. All
-    * [[IterCheckpoint]]-disciplined.
+    * sorted every (node, label) score row. Round state is an
+    * [[IterState]] chain.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, rounds: Int): DataFrame = {
@@ -449,10 +433,9 @@ object Graph {
     // the node set feeds only the label init and is consumed once —
     // no persist needed (r13: a single-use cache is pure write cost)
     val nodes = e.select(col("a").as("id")).distinct()
-    // lazy-chained round state with anchor-cadence checkpoints (r13,
-    // [[IterState]]): the label table is referenced once per round, so
-    // the chain executes as one job and keeps the argmax aggregation's
-    // hash(id) partitioning into the next round's merge
+    // the label table is read once per round, so rounds chain lazily
+    // and keep the argmax aggregation's hash(id) partitioning into the
+    // next round's merge
     val st = new IterState(nodes.withColumn("lbl", col("id")))
     for (_ <- 1 to rounds) {
       val scores = e
@@ -599,8 +582,8 @@ object Graph {
     * the persisted edge table with the current FRONTIER (only the
     * nodes first settled last round — a node settled earlier can
     * never improve a neighbor's min-distance, so re-expanding it is
-    * pure waste) plus one full-outer merge per round, state
-    * checkpointed and freed eagerly via [[IterCheckpoint]]. Work per
+    * pure waste) plus one full-outer merge per round, state held by
+    * [[IterState]]. Work per
     * round is bounded by the frontier, not the cumulative reached
     * set.
     */
@@ -613,13 +596,11 @@ object Graph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .repartition(col("src"))
       .distinct().persist(lvl)
-    // eager cache-backed round state (r13, [[IterState]]): each round
-    // reads its state TWICE (the merge input and the frontier filter),
-    // so rounds are materialized into a partitioning-preserving cache
-    // instead of per-round checkpoint files
+    // each round reads its state TWICE (the merge input and the
+    // frontier filter), so rounds are materialized
     val st = new IterState(seeds.select(col(seedCol).as("id"))
-      .distinct().withColumn("dist", lit(0L)), eager = true)
-    // lazy projection over the dist cache — no extra state
+      .distinct().withColumn("dist", lit(0L)))
+    // lazy projection over the stored round — no extra state
     var frontier = st.frame
     for (r <- 1 to maxDepth) {
       // everything the frontier reaches is at distance exactly r (all
@@ -629,8 +610,9 @@ object Graph {
         .withColumn("nd", lit(r.toLong))
       // least() skips nulls, so a side missing from the full join
       // simply yields the other side's distance
-      st.advance(st.frame.join(reach, Seq("id"), "full_outer")
-        .select(col("id"), least(col("dist"), col("nd")).as("dist")))
+      st.advanceWith(st.frame.join(reach, Seq("id"), "full_outer")
+        .select(col("id"), least(col("dist"), col("nd")).as("dist")))(
+        _.count())
       // dist==r ⇔ newly settled this round: every earlier-settled
       // node has dist ≤ r-1, and least() never increases a distance
       frontier = st.frame.filter(col("dist") === lit(r.toLong))
@@ -676,66 +658,44 @@ object Graph {
     val eD = eS.repartition(col("dst")).persist(lvl)
     def eFor(inCol: String): DataFrame =
       if (inCol == "src") eS else eD
-    // cache-backed half-round state with anchor-cadence reliable
-    // checkpoints (r13, the [[IterState]] rationale hand-rolled for
-    // the interleaved hub/auth pair): the raw sums persist with their
-    // aggregation's hash(id) partitioning — no half-round re-shuffles
-    // or re-broadcasts the score vector at sort-merge scale — and the
-    // ∞-norm max doubles as the cache-population job, one job per
-    // half-round where checkpoint+max was two. Every
-    // IterState.AnchorEvery-th half-round still lands a reliable
-    // checkpoint (bounded failure recompute; superseded anchors freed
-    // eagerly).
-    var sinceAnchor = 0
-    var anchor: DataFrame = null
-    def stage(df: DataFrame): DataFrame =
-      if (sinceAnchor + 1 >= IterState.AnchorEvery) {
-        val c = IterCheckpoint(df)
-        if (anchor != null) IterCheckpoint.free(anchor)
-        anchor = c; sinceAnchor = 0; c
-      } else { sinceAnchor += 1; df.persist(lvl) }
-    // returns (materialized raw sums, lazy renormed projection) — the
-    // base handle is what the superseded-round unpersist needs
-    // (unpersist on a projection or an anchor is a no-op; anchor files
-    // live until the next anchor supersedes them)
-    def half(scores: DataFrame, inCol: String,
-        outCol: String): (DataFrame, DataFrame) = {
-      val raw = stage(
-        eFor(inCol)
-          .join(scores.select(col("id").as(inCol), col("s")), inCol)
-          .groupBy(col(outCol).as("id")).agg(sum("s").as("s")))
-      // bounded driver collect: one scalar (the ∞-norm) — also the
-      // action that populates the cache. max over an empty score
-      // table (empty edge list) is null — pin 0, which makes the
-      // renorm divisor 1 and keeps every frame empty
-      val mxRow = raw.agg(max("s")).head()
-      val mx = if (mxRow.isNullAt(0)) 0L else mxRow.getLong(0)
-      (raw,
-        raw.select(col("id"), expr(s"s div ${mx / 1000000L + 1L}L").as("s")))
+    // one round state over the half-rounds, each materialized by its
+    // ∞-norm max: the next half-round reads it, and the max is the one
+    // job that stores it
+    val st = new IterState(eS.select(col("src").as("id")).distinct()
+      .withColumn("s", lit(1000000L)))
+    // one half-round's raw sums: the scores on `inCol` summed onto `outCol`
+    def sums(scores: DataFrame, inCol: String, outCol: String): DataFrame =
+      eFor(inCol)
+        .join(scores.select(col("id").as(inCol), col("s")), inCol)
+        .groupBy(col(outCol).as("id")).agg(sum("s").as("s"))
+    // bounded driver collect: one scalar (the ∞-norm). max over an
+    // empty score table (empty edge list) is null — pin 0, which makes
+    // the renorm divisor 1 and keeps every frame empty
+    def maxS(df: DataFrame): Long =
+      df.agg(coalesce(max("s"), lit(0L))).head().getLong(0)
+    def renorm(mx: Long): Column = expr(s"s div ${mx / 1000000L + 1L}L")
+    var h = st.frame
+    var out: DataFrame = null
+    for (i <- 1 to iterations) {
+      val mxA = st.advanceWith(sums(h, "src", "dst"))(maxS)
+      val a = st.frame.select(col("id"), renorm(mxA).as("s"))
+      if (i < iterations) {
+        val mxH = st.advanceWith(sums(a, "dst", "src"))(maxS)
+        h = st.frame.select(col("id"), renorm(mxH).as("s"))
+      } else {
+        // the state keeps only its current round, so the last half-round
+        // stores the final authorities beside the hub sums
+        val mxH = st.advanceWith(
+          sums(a, "dst", "src").select(lit("hub").as("side"), col("id"), col("s"))
+            .unionAll(a.select(lit("auth").as("side"), col("id"), col("s"))))(
+          d => maxS(d.filter(col("side") === "hub")))
+        out = st.frame.select(col("side"), col("id"),
+          when(col("side") === "hub", renorm(mxH))
+            .otherwise(col("s")).as("score"))
+      }
     }
-    // distinct over hash(src)-partitioned eS: no extra exchange; the
-    // first half-round's action populates this init cache
-    var hBase = eS.select(col("src").as("id")).distinct()
-      .withColumn("s", lit(1000000L)).persist(lvl)
-    var h = hBase
-    var aBase: DataFrame = null
-    var a: DataFrame = null
-    for (_ <- 1 to iterations) {
-      val (ab, av) = half(h, "src", "dst")
-      // ab is materialized, so the previous half-rounds' bases are dead
-      hBase.unpersist()
-      if (aBase != null) aBase.unpersist()
-      aBase = ab; a = av
-      val (hb, hv) = half(a, "dst", "src")
-      hBase = hb; h = hv
-    }
-    // the final rounds' caches (or anchor files) back the returned
-    // frames lazily; bench/verify sessions clear caches per query
-    // (bounded: two half-rounds)
     eS.unpersist(); eD.unpersist()
-    h.select(lit("hub").as("side"), col("id"), col("s").as("score"))
-      .unionAll(a.select(lit("auth").as("side"), col("id"),
-        col("s").as("score")))
+    out
   }
 
   /** WEISFEILER–LEMAN (1-WL) COLOR REFINEMENT over an undirected
@@ -766,7 +726,7 @@ object Graph {
     * Scale shape: [[pageRank]]'s round structure — per round one hash
     * join of the persisted edge table with the current color table
     * plus one sum/count aggregation per node (map-side combinable),
-    * checkpointed and freed via [[IterCheckpoint]]. Per-node state is
+    * held by [[IterState]]. Per-node state is
     * O(1); nothing quadratic. Rounds is small and fixed (1-WL
     * stabilizes in ≤ diameter rounds; 2 suffices for fingerprints).
     */
@@ -783,12 +743,10 @@ object Graph {
       .repartition(col("b"))
       .distinct().persist(lvl)
     val lane = lit(1000000000L)
-    // eager cache-backed round state (r13, [[IterState]]): each round
-    // reads its color table TWICE (the neighbor join and the recolor
-    // join), so rounds are materialized into a partitioning-preserving
-    // cache instead of per-round checkpoint files
+    // each round reads its color table TWICE (the neighbor join and
+    // the recolor join), so rounds are materialized
     val st = new IterState(e.groupBy(col("a").as("id"))
-      .agg(count(lit(1)).cast("string").as("c")), eager = true)
+      .agg(count(lit(1)).cast("string").as("c")))
     for (_ <- 1 to rounds) {
       val colors = st.frame
       val nb = e
@@ -801,12 +759,12 @@ object Graph {
           count(lit(1)).as("dg"))
       // every node has ≥1 neighbor BY CONSTRUCTION (edge endpoints),
       // so the inner join covers the full node set
-      st.advance(colors.join(nb, "id")
+      st.advanceWith(colors.join(nb, "id")
         .select(col("id"),
           md5(concat(col("c"), lit("|"),
             col("l1").cast("string"), lit(","),
             col("l2").cast("string"), lit(","),
-            col("dg").cast("string"))).as("c")))
+            col("dg").cast("string"))).as("c")))(_.count())
     }
     val out = st.finish().groupBy("c")
       .agg(count(lit(1)).as("n_nodes"))
@@ -837,7 +795,7 @@ object Graph {
     * Scale shape: [[pageRank]]'s round structure exactly — the edge
     * table persisted once, per round one hash join on the source id
     * plus one map-side-combined sum on the destination,
-    * [[IterCheckpoint]]-disciplined state; one driver scalar (Δ_in).
+    * [[IterState]] round state; one driver scalar (Δ_in).
     */
   def katzCentrality(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
@@ -861,8 +819,7 @@ object Graph {
     val denRow = nodesDeg.agg(max(col("ind"))).head()
     val den = if (denRow.isNullAt(0)) 1L else math.max(1L, denRow.getLong(0))
     val nodes = nodesDeg.select(col("id"))
-    // lazy-chained round state with anchor-cadence checkpoints (r13,
-    // [[IterState]]): the pageRank rationale, exactly
+    // each round reads the scores once, so rounds chain lazily
     val st = new IterState(nodes.withColumn("x", lit(1000000L)))
     for (_ <- 1 to rounds) {
       val in = e

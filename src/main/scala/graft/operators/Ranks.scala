@@ -38,8 +38,8 @@ object Ranks {
     // recompute could re-sample different range boundaries and desync
     // offset from pid. Checkpoint files make the pid→offset pairing
     // stable however the output is re-read (and survive executor
-    // loss, the IterCheckpoint contract).
-    val local = IterCheckpoint(df
+    // loss, the IterState.durable contract).
+    val local = IterState.durable(df
       .repartitionByRange(nParts, sc: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__lpre", sum(col(cntCol).cast("long"))

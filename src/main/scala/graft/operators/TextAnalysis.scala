@@ -1038,16 +1038,17 @@ object TextAnalysis {
     * [[bpeEncode]]: returns (per-doc token lists after all rounds —
     * with the ORIGINAL token count carried as n0 — and the per-round
     * merge table).
-    */
-  /** `trackTotals=false` ([[bpeEncode]]) skips the per-round
-    * toks-after count actions — the encoder never reads them, and each
-    * was a full extra scan of the round's token lists. The LAST
-    * round's fold is returned LAZY (not checkpointed) in both modes:
-    * its single consumer (the trainer's final total, or the encoder's
+    *
+    * `trackTotals=false` ([[bpeEncode]]) skips the last round's
+    * toks-after total — the encoder never reads it, and it is a full
+    * extra scan of the round's token lists. The LAST
+    * round's fold is returned LAZY (not stored) in both modes: its
+    * single consumer (the trainer's final total, or the encoder's
     * final top-N) executes it exactly once on top of the previous
-    * round's checkpoint, saving one full write+read of every token
-    * list (r12 optimization round, guide §1.2 "don't compute things
-    * you throw away").
+    * round, saving one full write+read of every token list (r12
+    * optimization round, guide §1.2 "don't compute things you throw
+    * away"). With `trackTotals` the token lists are freed before
+    * returning: the trainer reads only the merge table.
     */
   private def bpeFit(df: DataFrame, idCol: String, textCol: String,
       merges: Int, trackTotals: Boolean = true)
@@ -1055,19 +1056,20 @@ object TextAnalysis {
     // each round runs TWO actions (argmax pair, token total) and the
     // next round's fold — over a LAZY chain those re-execute every
     // prior round's fold from the scan (round r costs r folds).
-    // Materializing each round's token lists makes round cost constant.
-    // r13: the round state is a CACHE via [[IterState]] (eager), not
-    // per-round checkpoint files — token lists are the heaviest
-    // iterative state in the suite, and each round paid a full
-    // write+read of every list; the trainer's own toks-after total
-    // doubles as the cache-population job. Reliable checkpoints land
-    // on the IterState anchor cadence.
+    // Materializing each round's token lists ([[IterState]]) makes
+    // round cost constant; the trainer's own toks-after total is the
+    // job that stores each round.
     val st = new IterState(df
       .select(col(idCol).as("id"), toks(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= 1)
-      .withColumn("n0", size(col("toks")).cast("long")), eager = true)
+      .withColumn("n0", size(col("toks")).cast("long")))
+    // round 1's argmax reads the token lists before any round is
+    // materialized: store them first
+    st.finish()
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long, Long)]
+    def total(d: DataFrame): Long =
+      d.agg(sum(size(col("toks")))).head().getLong(0)
     var last: DataFrame = st.frame
     for (r <- 1 to merges) {
       val cur = st.frame
@@ -1099,29 +1101,21 @@ object TextAnalysis {
       if (r < merges) {
         // later rounds take 2+ actions over this state (argmax, fold,
         // optional total) — materialize so each executes once; the
-        // total IS the materializing action when tracked
-        if (trackTotals) {
-          val toksAfter = st.advanceWith(folded)(
-            _.agg(sum(size(col("toks"))).as("t")).head().getLong(0))
-          out += ((r, a, b, c, toksAfter))
-        } else st.advance(folded)
+        // total is the materializing action
+        val toksAfter = st.advanceWith(folded)(total)
+        if (trackTotals) out += ((r, a, b, c, toksAfter))
         last = st.frame
       } else {
         // last round: exactly ONE downstream action consumes the fold
         // (the total below, or the encoder's top-N), so leave it lazy
-        // over the previous round's cache — one full token-list
-        // materialization saved. That superseded cache intentionally
-        // stays alive to back it (cleared per query by bench/verify).
+        // over the previous round — one full token-list materialization
+        // saved. That round's cache stays alive to back it (cleared per
+        // query by bench/verify).
         last = folded
-        if (trackTotals) {
-          val toksAfter = folded.agg(sum(size(col("toks"))).as("t"))
-            .head().getLong(0)
-          out += ((r, a, b, c, toksAfter))
-        }
+        if (trackTotals) out += ((r, a, b, c, total(folded)))
       }
     }
-    // the final round's backing cache/anchor is released with the
-    // session (or the bench's per-query cache clear)
+    if (trackTotals) st.release()
     (last, out.toSeq)
   }
 
@@ -1159,7 +1153,8 @@ object TextAnalysis {
   def bpeEncode(df: DataFrame, idCol: String, textCol: String,
       merges: Int = 3, topN: Int = 50): DataFrame = {
     // trackTotals=false: the merge table's toks-after column is unused
-    // here, and each total was a full extra scan of the token lists
+    // here, and the last round's total is a full extra scan of the
+    // token lists
     val (cur, _) = bpeFit(df, idCol, textCol, merges,
       trackTotals = false)
     cur.select(col("id").as(idCol), col("n0").as("toks_before"),

@@ -17,19 +17,27 @@ object GraftSql {
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** The block-backed RDD beneath a (local)checkpointed Dataset — the
-    * handle iterative algorithms need to FREE superseded rounds:
-    * `Dataset.unpersist` goes through the cache manager, which knows
-    * nothing about checkpoint blocks, so without this each round's
-    * localCheckpoint blocks accrue until the driver GCs the old
-    * Dataset reference.
+  /** A plan leaf over a persisted frame's cache entry: a `LogicalRDD`
+    * whose RDD scans the entry's rows, with the entry's size. A plan
+    * that reads the leaf does not contain the frame's own plan, yet a
+    * lost block is still recomputed through the RDD lineage. Call it
+    * once the entry is filled, so the size is known.
+    *
+    * The leaf declares no partitioning. Declaring the entry's hash
+    * partitioning was measured slower at sf0.1, and a LogicalRDD that
+    * declares a partitioning does not canonicalize alike once the
+    * analyzer re-instances it for a self-join, so a cached plan that
+    * reads it is missed on one side.
     */
-  def checkpointRdd(df: DataFrame)
-      : Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case l: execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
+  def cacheLeaf(df: DataFrame): DataFrame = {
+    val s = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val rel = s.sharedState.cacheManager.lookupCachedData(s, logicalPlan(df))
+      .get.cachedRepresentation
+    val scan = execution.columnar.InMemoryTableScanExec(rel.output, Nil, rel)
+    ofRows(s, execution.LogicalRDD(rel.output, scan.execute(),
+      outputOrdering = scan.outputOrdering, isStreaming = false)(s,
+      Some(rel.computeStats())))
+  }
 
   /** Block until every event posted so far has reached its listeners:
     * a `QueryExecutionListener` hears of an action on the listener bus,

@@ -488,7 +488,8 @@ class OperatorsSpec extends AnyFunSuite {
     val labels = Dedup.connectedComponents(pairs, "id_a", "id_b")
     val before = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // the result is file-backed, not block-backed
-    val rdd = org.apache.spark.sql.GraftSql.checkpointRdd(labels)
+    val rdd = Some(labels.queryExecution.analyzed).collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
     assert(rdd.isDefined && rdd.get.getCheckpointFile.isDefined,
       "connectedComponents result must be reliably checkpointed (files, not blocks)")
     // simulate executor loss: drop EVERY persisted block in the session
@@ -504,6 +505,32 @@ class OperatorsSpec extends AnyFunSuite {
       .foreach(_.unpersist(blocking = true))
     val r1 = ranks.orderBy("id").collect().map(_.getDouble(1)).toSeq
     assert(r0 == r1, "ranks changed after losing all cached blocks")
+    // every materializing loop, run past one anchor: the rounds between
+    // anchors are cache leaves whose lost blocks are recomputed through
+    // their lineage, which localCheckpoint would have cut
+    val past = IterState.AnchorEvery + 1
+    val g = IterStateSpec.ring
+    val path = (0L until 12L).map(i => (i, i + 1)).toDF("s", "d")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "kcorePeel" -> (() => Graph.kcorePeel(IterStateSpec.ringWithTail,
+        "s", "d", k = 2, rounds = past)),
+      "bfsDepth" -> (() => Graph.bfsDepth(path, "s", "d",
+        Seq(0L).toDF("id"), "id", maxDepth = past)),
+      "wlColors" -> (() => Graph.wlColors(g, "s", "d", rounds = past)),
+      "bpeTrain" -> (() => TextAnalysis.bpeTrain(IterStateSpec.corpus,
+        "doc_id", "text", merges = past)),
+      "bpeEncode" -> (() => TextAnalysis.bpeEncode(IterStateSpec.corpus,
+        "doc_id", "text", merges = past)),
+      // hits anchors on half-rounds: 5 iterations are 10 of them
+      "hits" -> (() => Graph.hits(g, "s", "d", iterations = past / 2 + 1))
+    ).foreach { case (name, run) =>
+      val out = run()
+      val before = out.collect().map(_.toString).sorted.toSeq
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+      val after = out.collect().map(_.toString).sorted.toSeq
+      assert(after == before, s"$name changed after losing all cached blocks")
+    }
   }
 
   test("triangleCount: degree orientation counts each triangle once") {
